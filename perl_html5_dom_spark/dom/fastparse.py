@@ -1513,9 +1513,10 @@ def try_parse(src: str) -> Document | None:
         return None
     try:
         return _Fast(src).run()
-    except _Bail:
-        return None
-    except IndexError:
+    except (_Bail, IndexError, RecursionError):
+        # RecursionError: the lane's table/cell handlers recurse once per
+        # nesting level; a page nested past the interpreter's limit goes
+        # to the full machine, whose stack is an explicit list
         return None
 
 

@@ -59,10 +59,6 @@ _FOREIGN_BREAKOUT = frozenset(
 _MATHML_ATTR_ADJUST = {"definitionurl": "definitionURL"}
 
 
-def _is_ws(text: str) -> bool:
-    return not text.strip(_WS)
-
-
 class TreeBuilder:
     def __init__(self, scripts: bool = True, ignore_whitespace: bool = False,
                  ignore_doctype: bool = False) -> None:

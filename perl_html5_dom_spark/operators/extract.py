@@ -16,7 +16,9 @@ Design for 100 TB:
     the only shuffle in the whole pipeline is the optional salted
     repartition (plans/pipeline.py);
   * batches cross the JVM→Python boundary via Arrow (mapInPandas), the
-    analog of the reference's Perl↔XS boundary; zero per-row Python UDFs;
+    analog of the reference's Perl↔XS boundary; zero per-row Python UDFs.
+    The batch loop is :func:`..util.map_docs`, shared by every
+    per-document kernel;
   * selector compilation happens once on the driver and ships to
     executors inside the closure — the analog of the reference's
     precompiled-selector reuse (DOM.pod:2544-2551).
@@ -25,13 +27,13 @@ Design for 100 TB:
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
 
 from ..dom import encoding as enc
 from ..dom import fastparse, innertext, serializer
 from ..dom.constants import ELEMENT_NODE, TEXT_NODE
 from ..dom.document import Document
 from ..selector import matcher
+from ..util import map_docs
 
 # ---------------------------------------------------------------------------
 # Boilerplate heuristics (Phase 3 of SURVEY.md §7)
@@ -53,18 +55,6 @@ BLOCK_CLASS_RE = re.compile(
 
 #: candidate containers for main content
 CANDIDATE_TAGS = frozenset("article main section div body td".split())
-
-
-def _is_blocked(doc: Document, nid: int) -> bool:
-    tag = doc.tag[nid]
-    if tag in BLOCK_TAGS:
-        return True
-    attrs = doc.attrs[nid]
-    if attrs:
-        blob = (attrs.get("class") or "") + " " + (attrs.get("id") or "")
-        if blob.strip() and BLOCK_CLASS_RE.search(blob):
-            return True
-    return False
 
 
 def _blocked_array(doc: Document) -> list[bool]:
@@ -267,26 +257,24 @@ def extract_one(html, span_selector=None, fields: tuple = ALL_FIELDS) -> dict:
 
 def extract_pages(df, span_selector: str | None = "a[href]",
                   fields: tuple | list | None = None,
-                  max_html_bytes: int | None = None,
-                  on_error: str = "contain"):
+                  max_html_bytes: int | None = None):
     """DataFrame(url, html [, ...]) → DataFrame of requested fields
     (default: EXTRACT_SCHEMA).
 
     The selector is compiled ONCE here on the driver; the compiled plan
     rides the task closure to every executor (reference precompiled
-    selectors, DOM.pod:2544-2551).
+    selectors, DOM.pod:2544-2551).  Batching and the batch-local
+    duplicate collapse are :func:`..util.map_docs`'s.
 
     Containment (the 10^12-document policy — one pathological page must
     not fail a task, 4 retries, then the whole job):
 
-    * ``on_error="contain"`` (default) wraps the per-document kernel in
-      try/except; a raising parse emits an empty row instead of killing
-      the task.  ``on_error="raise"`` restores fail-fast for tests and
-      differential fuzzing.
+    * the per-document kernel is wrapped in try/except; a raising parse
+      emits an empty row instead of killing the task;
     * ``max_html_bytes`` truncates oversized documents before parsing
       (HTML5 parsing is total, so a truncated prefix still parses) so
-      one 1 GiB page can't straggle a partition.
-    * Request the ``"err"`` field to surface what happened per row:
+      one 1 GiB page can't straggle a partition;
+    * request the ``"err"`` field to surface what happened per row:
       null = clean, ``truncated: ...`` and/or ``Type: message`` —
       the lineage layer (plans/pipeline.py) aggregates it per bucket.
     """
@@ -304,50 +292,23 @@ def extract_pages(df, span_selector: str | None = "a[href]",
         "text_content": "", "n_nodes": 0, "n_elements": 0, "spans": [],
     }
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+    def one(html) -> tuple:
+        err = None
+        if html is None:
+            # real corpora carry null html rows — emit an empty
+            # extraction instead of failing the task
+            r = empty_row
+        else:
+            if max_html_bytes is not None and len(html) > max_html_bytes:
+                err = f"truncated: {len(html)} > {max_html_bytes} bytes"
+                html = html[:max_html_bytes]
+            try:
+                r = extract_one(html, compiled, kfields)
+            except Exception as exc:  # noqa: BLE001 — containment
+                r = empty_row
+                msg = f"{type(exc).__name__}: {exc}"
+                err = f"{err}; {msg}" if err else msg
+        row = tuple(r[k] for k in kfields)
+        return row + (err,) if want_err else row
 
-        for pdf in batches:
-            out = {k: [] for k in ("url",) + fields}
-            # batch-local exact-duplicate collapse: web corpora carry
-            # 30-50% byte-identical pages (mirrors, re-crawls, session
-            # urls) and the kernel output is a pure function of the html
-            # bytes — so each DISTINCT document is parsed once per Arrow
-            # batch and replicas reuse the result.  The memo dies with
-            # the batch (bounded memory: <= one batch of rows), and on
-            # an all-distinct corpus it costs one dict probe per row.
-            memo: dict = {}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                # real corpora carry null/empty html rows — emit an
-                # empty extraction instead of failing the task
-                if html is None:
-                    r, err = empty_row, None
-                else:
-                    hit = memo.get(html)
-                    if hit is None:
-                        err = None
-                        h = html
-                        if (max_html_bytes is not None
-                                and len(h) > max_html_bytes):
-                            err = (f"truncated: {len(h)} > "
-                                   f"{max_html_bytes} bytes")
-                            h = h[:max_html_bytes]
-                        try:
-                            r = extract_one(h, compiled, kfields)
-                        except Exception as exc:  # noqa: BLE001 — containment
-                            if on_error == "raise":
-                                raise
-                            r = empty_row
-                            msg = f"{type(exc).__name__}: {exc}"
-                            err = f"{err}; {msg}" if err else msg
-                        memo[html] = (r, err)
-                    else:
-                        r, err = hit
-                out["url"].append(url)
-                for k in kfields:
-                    out[k].append(r[k])
-                if want_err:
-                    out["err"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select("url", "html").mapInPandas(run, schema=schema)
+    return map_docs(df, ["url"], "html", one, schema)

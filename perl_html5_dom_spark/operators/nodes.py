@@ -20,9 +20,8 @@ with plain Catalyst-optimizable DataFrame ops.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from ..dom.constants import ELEMENT_NODE
+from ..util import map_docs
 from .extract import parse_document
 
 NODES_SCHEMA = (
@@ -36,35 +35,6 @@ NODES_SCHEMA = (
 _COLS = [c.split(" ")[0] for c in NODES_SCHEMA.split(", ")]
 
 
-def doc_node_rows(url: str, html) -> list[tuple]:
-    """Row-tuple form of one document's node table (tests/debug)."""
-    doc = parse_document(html)
-    order = doc.order
-    pos = doc.order_pos
-    end = doc.subtree_end
-    depth = {doc.root: 0}
-    paths = [""] * len(doc.parent)
-    rows = []
-    for nid in order:
-        p = doc.parent[nid]
-        d = depth.get(p, -1) + 1
-        depth[nid] = d
-        if doc.node_type[nid] == ELEMENT_NODE:
-            paths[nid] = (paths[p] + ">" + doc.tag[nid]
-                          if p != -1 and paths[p] else doc.tag[nid])
-        rows.append((
-            url, nid, p if p != -1 else None, pos[nid], end[nid], d,
-            doc.tag[nid], doc.ns[nid], doc.node_type[nid],
-            paths[nid] if doc.node_type[nid] == ELEMENT_NODE else None,
-            doc.text[nid],
-            dict(doc.attrs[nid]) if doc.attrs[nid] is not None else None,
-            bool(doc.self_closed[nid]),
-            doc.raw_begin[nid], doc.raw_length[nid],
-            doc.elem_begin[nid], doc.elem_length[nid],
-        ))
-    return rows
-
-
 def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
     """DataFrame(url, html) → node table.
 
@@ -73,16 +43,17 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
     queries that never read ``attrs``/``text`` skip building the
     expensive map/string Arrow columns entirely.
 
-    Construction is COLUMNAR: the kernel appends straight into per-column
-    lists (the Document already stores struct-of-arrays), so unrequested
-    columns cost nothing and pandas never pivots a row list."""
+    Construction is COLUMNAR: the kernel builds per-column lists (the
+    Document already stores struct-of-arrays) that
+    :func:`..util.map_docs` extends whole, so unrequested columns cost
+    nothing and pandas never pivots a row list.  The node table is a
+    pure function of the html bytes, so the runner builds each distinct
+    document once per batch."""
     keep = (_COLS if columns is None
             else [c for c in _COLS if c in set(columns) | {"url"}])
     schema = (NODES_SCHEMA if columns is None else ", ".join(
         p for p in NODES_SCHEMA.split(", ") if p.split(" ")[0] in set(keep)))
     want = set(keep)
-
-    doc_cols = [c for c in keep if c != "url"]
 
     def one_doc(html) -> tuple[int, dict[str, list]]:
         """Per-document column lists (everything except url)."""
@@ -163,30 +134,7 @@ def nodes_df(df, elements_only: bool = False, columns: list[str] | None = None):
             d["elem_length"] = [el[n] for n in nids]
         return len(nids), d
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            data: dict[str, list] = {c: [] for c in keep}
-            # batch-local exact-duplicate collapse (see extract_pages):
-            # the node table of a document is a pure function of its
-            # html bytes, so each distinct document is parsed and
-            # column-built once per batch; replicas pay one C-level
-            # list extend per column
-            memo: dict = {}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    hit = one_doc(html)
-                    memo[html] = hit
-                n, d = hit
-                if "url" in want:
-                    data["url"].extend([url] * n)
-                for c in doc_cols:
-                    data[c].extend(d[c])
-            yield pd.DataFrame(data, columns=keep)
-
-    return df.select("url", "html").mapInPandas(run, schema=schema)
+    return map_docs(df, ["url"], "html", one_doc, schema, explode=True)
 
 
 def frequent_paths(pages, min_frac: float = 0.9):

@@ -1,7 +1,7 @@
 """Spark operator: PDF text + layout extraction over a binary column.
 
-Mirrors :mod:`.extract` for HTML: an Arrow ``mapInPandas`` kernel over
-``(url, pdf binary)`` running the from-scratch parser in
+Mirrors :mod:`.extract` for HTML: an Arrow :func:`..util.map_docs` kernel
+over ``(url, pdf binary)`` running the from-scratch parser in
 :mod:`..dom.pdf`.  One document = one task unit (same data-parallelism
 rationale as HTML parse; reference guidance on intra-parse threading,
 /root/reference/lib/HTML5/DOM.pod:3228-3230), so throughput scales with
@@ -15,32 +15,25 @@ the task (the lineage pipeline counts them per partition).
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from ..dom.pdf import extract_pdf_text
+from ..util import map_docs
 
 PDF_SCHEMA = "url string, n_pages int, text string, err string"
 
 
 def extract_pdfs(df, pdf_col: str = "pdf"):
-    """DataFrame(url, pdf) → DataFrame(url, n_pages, text, err)."""
+    """DataFrame(url, pdf) → DataFrame(url, n_pages, text, err).
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+    The output is a pure function of the pdf bytes, so
+    :func:`..util.map_docs` parses each distinct file once per batch."""
 
-        for pdf in batches:
-            out = {"url": [], "n_pages": [], "text": [], "err": []}
-            for url, data in zip(pdf["url"], pdf[pdf_col]):
-                n, text, err = 0, "", None
-                if data is not None:
-                    try:
-                        n, text = extract_pdf_text(bytes(data))
-                    except Exception as exc:  # noqa: BLE001 — crawl-grade
-                        err = type(exc).__name__
-                out["url"].append(url)
-                out["n_pages"].append(n)
-                out["text"].append(text)
-                out["err"].append(err)
-            yield pd.DataFrame(out)
+    def one(data) -> tuple:
+        if data is None:
+            return 0, "", None
+        try:
+            n, text = extract_pdf_text(bytes(data))
+        except Exception as exc:  # noqa: BLE001 — crawl-grade
+            return 0, "", type(exc).__name__
+        return n, text, None
 
-    return df.select("url", pdf_col).mapInPandas(run, schema=PDF_SCHEMA)
+    return map_docs(df, ["url"], pdf_col, one, PDF_SCHEMA)

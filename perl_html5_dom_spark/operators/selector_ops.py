@@ -21,12 +21,13 @@ Both return the same shape: ``(url, node_id, ord, tag, begin, length)``
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 from pyspark.sql import functions as F
 
+from ..dom import innertext, serializer
 from ..selector import matcher
 from ..selector.parser import parse_selector
+from ..util import map_docs
+from .extract import parse_document
 
 MATCHES_SCHEMA = (
     "url string, node_id bigint, ord bigint, tag string, "
@@ -123,36 +124,47 @@ def css_find(df, selector: str, first: bool = False):
     kernel (reference utils.c:248-254)."""
     compiled = matcher.compile_selector(selector)
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
+    def one(html) -> tuple[int, dict[str, list]]:
+        doc = parse_document(html)
+        nids = matcher.find(doc, compiled, first=first)
+        pos, tag = doc.order_pos, doc.tag
+        eb, el = doc.elem_begin, doc.elem_length
+        return len(nids), {
+            "node_id": nids, "ord": [pos[n] for n in nids],
+            "tag": [tag[n] for n in nids],
+            "begin": [eb[n] for n in nids],
+            "length": [el[n] for n in nids]}
 
-        from .extract import parse_document
-
-        cols = ["url", "node_id", "ord", "tag", "begin", "length"]
-        for pdf in batches:
-            rows = []
-            # batch-local exact-duplicate collapse (see extract_pages):
-            # matches are a pure function of the html bytes, so each
-            # distinct document is parsed+matched once per batch
-            memo: dict = {}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    doc = parse_document(html)
-                    pos = doc.order_pos
-                    hit = [
-                        (nid, pos[nid], doc.tag[nid],
-                         doc.elem_begin[nid], doc.elem_length[nid])
-                        for nid in matcher.find(doc, compiled, first=first)]
-                    memo[html] = hit
-                rows.extend((url,) + t for t in hit)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("url", "html").mapInPandas(run, schema=MATCHES_SCHEMA)
+    return map_docs(df, ["url"], "html", one, MATCHES_SCHEMA, explode=True)
 
 
 def css_at(df, selector: str):
     return css_find(df, selector, first=True)
+
+
+def _sink(what: str):
+    """One Collection sink (reference Collection.pm:117-131) as a
+    ``(doc, nid) -> str | None`` function."""
+    if what.startswith("attr:"):
+        name = what[5:]
+
+        def attr(doc, nid):
+            a = doc.attrs[nid]
+            return a.get(name) if a else None
+        return attr
+    if what == "text":
+        return serializer.text_content
+    if what == "html":
+        return serializer.serialize
+    if what == "inner_html":
+        return lambda doc, nid: serializer.serialize(doc, nid, inner=True)
+    if what == "inner_text":
+        return innertext.inner_text
+    raise ValueError(what)
+
+
+def _sink_columns(whats) -> list[str]:
+    return [w.replace("attr:", "attr_").replace(":", "_") for w in whats]
 
 
 def css_extract(df, selector: str, what: str = "text"):
@@ -161,47 +173,9 @@ def css_extract(df, selector: str, what: str = "text"):
 
     The Collection sinks of the reference (Collection.pm:117-131) —
     returns (url, node_id, ord, value)."""
-    compiled = matcher.compile_selector(selector)
-    attr_name = what[5:] if what.startswith("attr:") else None
-    if attr_name is None and what not in (
-            "text", "html", "inner_html", "inner_text"):
-        raise ValueError(what)
-
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
-
-        from ..dom import innertext, serializer
-        from .extract import parse_document
-
-        cols = ["url", "node_id", "ord", "value"]
-        for pdf in batches:
-            rows = []
-            memo: dict = {}   # batch-local exact-dup collapse (see css_find)
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    doc = parse_document(html)
-                    pos = doc.order_pos
-                    hit = []
-                    for nid in matcher.find(doc, compiled):
-                        if attr_name is not None:
-                            a = doc.attrs[nid]
-                            v = a.get(attr_name) if a else None
-                        elif what == "text":
-                            v = serializer.text_content(doc, nid)
-                        elif what == "html":
-                            v = serializer.serialize(doc, nid)
-                        elif what == "inner_html":
-                            v = serializer.serialize(doc, nid, inner=True)
-                        else:
-                            v = innertext.inner_text(doc, nid)
-                        hit.append((nid, pos[nid], v))
-                    memo[html] = hit
-                rows.extend((url,) + t for t in hit)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("url", "html").mapInPandas(
-        run, schema="url string, node_id bigint, ord bigint, value string")
+    [col] = _sink_columns((what,))
+    return css_extract_multi(df, selector, (what,)).withColumnRenamed(
+        col, "value")
 
 
 def css_extract_multi(df, selector: str, whats: tuple = ("text",)):
@@ -212,49 +186,18 @@ def css_extract_multi(df, selector: str, whats: tuple = ("text",)):
     column per sink>); ``attr:name`` sinks become ``attr_name``
     columns (None when absent)."""
     compiled = matcher.compile_selector(selector)
-    for w in whats:
-        if not w.startswith("attr:") and w not in (
-                "text", "html", "inner_html", "inner_text"):
-            raise ValueError(w)
-    colnames = [w.replace("attr:", "attr_").replace(":", "_")
-                for w in whats]
+    sinks = [_sink(w) for w in whats]
+    colnames = _sink_columns(whats)
 
-    def run(batches: Iterable) -> Iterator:
-        import pandas as pd
-
-        from ..dom import innertext, serializer
-        from .extract import parse_document
-
-        cols = ["url", "node_id", "ord"] + colnames
-        for pdf in batches:
-            rows = []
-            memo: dict = {}   # batch-local exact-dup collapse (see css_find)
-            for url, html in zip(pdf["url"], pdf["html"]):
-                hit = memo.get(html)
-                if hit is None:
-                    doc = parse_document(html)
-                    pos = doc.order_pos
-                    hit = []
-                    for nid in matcher.find(doc, compiled):
-                        vals = []
-                        for what in whats:
-                            if what.startswith("attr:"):
-                                a = doc.attrs[nid]
-                                vals.append(a.get(what[5:]) if a else None)
-                            elif what == "text":
-                                vals.append(serializer.text_content(doc, nid))
-                            elif what == "html":
-                                vals.append(serializer.serialize(doc, nid))
-                            elif what == "inner_html":
-                                vals.append(serializer.serialize(
-                                    doc, nid, inner=True))
-                            else:
-                                vals.append(innertext.inner_text(doc, nid))
-                        hit.append((nid, pos[nid], *vals))
-                    memo[html] = hit
-                rows.extend((url,) + t for t in hit)
-            yield pd.DataFrame(rows, columns=cols)
+    def one(html) -> tuple[int, dict[str, list]]:
+        doc = parse_document(html)
+        nids = matcher.find(doc, compiled)
+        pos = doc.order_pos
+        cols = {"node_id": nids, "ord": [pos[n] for n in nids]}
+        for c, sink in zip(colnames, sinks):
+            cols[c] = [sink(doc, n) for n in nids]
+        return len(nids), cols
 
     schema = ("url string, node_id bigint, ord bigint, "
               + ", ".join(f"{c} string" for c in colnames))
-    return df.select("url", "html").mapInPandas(run, schema=schema)
+    return map_docs(df, ["url"], "html", one, schema, explode=True)

@@ -9,8 +9,11 @@ needed (see operators/dedup.py H()).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
+from ..util import map_docs
 from .dedup import H, P, tokens_expr
 
 #: tiny per-language stopword marker sets for the n-gram/stopword
@@ -68,56 +71,24 @@ def quality_scores(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     bit-identical (same pattern as :func:`ngram_repetition`)."""
     markers = set(LANG_MARKERS["en"])
     carry = tuple(carry)
+    non_alpha = re.compile("[^a-zA-Z]+")
 
-    def run(batches):
-        import re
-
-        import pandas as pd
-
-        non_alpha = re.compile("[^a-zA-Z]+")
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "n_chars": [], "n_tokens": [],
-                "stop_hits": [], "alpha_chars": []}
-            # batch-local exact-dup memo (round-6 kernel recipe): the
-            # counts are pure functions of the text, so duplicate rows
-            # in a batch reuse them; the memo dies with the batch
-            memo: dict = {}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(did)
-                if text is None:
-                    # mirrors SQL null semantics: length(null) = null,
-                    # size(split(null)) = null, hits over null = null
-                    out["n_chars"].append(None)
-                    out["n_tokens"].append(None)
-                    out["stop_hits"].append(None)
-                    out["alpha_chars"].append(None)
-                    continue
-                hit = memo.get(text)
-                if hit is None:
-                    t = text.split(" ")
-                    hit = (len(text), len(t),
-                           sum(1 for w in t if w in markers),
-                           len(text) - sum(len(m.group())
-                                           for m in
-                                           non_alpha.finditer(text)))
-                    memo[text] = hit
-                out["n_chars"].append(hit[0])
-                out["n_tokens"].append(hit[1])
-                out["stop_hits"].append(hit[2])
-                out["alpha_chars"].append(hit[3])
-            df = pd.DataFrame(out)
-            for c in carry:
-                df[c] = pdf[c].values
-            yield df
+    def counts(text) -> tuple:
+        if text is None:
+            # mirrors SQL null semantics: length(null) = null,
+            # size(split(null)) = null, hits over null = null
+            return None, None, None, None
+        t = text.split(" ")
+        return (len(text), len(t), sum(1 for w in t if w in markers),
+                len(text) - sum(len(m.group())
+                                for m in non_alpha.finditer(text)))
 
     types = {f.name: f.dataType.simpleString() for f in docs.schema.fields}
     carry_schema = "".join(f", {c} {types[c]}" for c in carry)
-    in_cols = ["doc_id", "text"] + [c for c in carry
-                                    if c not in ("doc_id", "text")]
-    kern = docs.select(*in_cols).mapInPandas(
-        run, schema="doc_id bigint, n_chars bigint, n_tokens bigint, "
-                    "stop_hits bigint, alpha_chars bigint" + carry_schema)
+    kern = map_docs(
+        docs, ["doc_id", *carry], "text", counts,
+        "doc_id bigint, n_chars bigint, n_tokens bigint, "
+        "stop_hits bigint, alpha_chars bigint" + carry_schema)
     return kern.selectExpr(
         "doc_id",
         "n_chars",

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from .dom import encoding as enc
+from .dom.serializer import serialize
+from .dom.treebuilder import TreeBuilder
 from .operators import contamination as cn
 from .operators import dedup as dd
 from .operators import events as ev
@@ -316,47 +319,31 @@ def q_first_link_begin(spark, sf_dir):
 
 
 def q_detect_encoding(spark, sf_dir):
-    return pg.encoded_pages_df(spark, sf_dir).select("url", "html").mapInPandas(
-        _detect_encoding_kernel, schema="url string, encoding string")
+    return ut.map_docs(pg.encoded_pages_df(spark, sf_dir), ["url"], "html",
+                       _detect_encoding_one, "url string, encoding string")
 
 
-def _detect_encoding_kernel(batches):
-    import pandas as pd
-
-    from .dom import encoding as enc
-
-    for pdf in batches:
-        out = {"url": [], "encoding": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            out["url"].append(url)
-            out["encoding"].append(enc.sniff_and_decode(bytes(html))[0])
-        yield pd.DataFrame(out)
+def _detect_encoding_one(html):
+    return (enc.sniff_and_decode(bytes(html))[0],)
 
 
 def q_binary_meta(spark, sf_dir):
     """Multimodal plumbing: opaque binary column → typed metadata via
     Arrow-batched kernel (magic sniff + size)."""
-    return pg.encoded_pages_df(spark, sf_dir).select("url", "html").mapInPandas(
-        _binary_meta_kernel, schema="url string, n_bytes bigint, kind string")
+    return ut.map_docs(pg.encoded_pages_df(spark, sf_dir), ["url"], "html",
+                       _binary_meta_one,
+                       "url string, n_bytes bigint, kind string")
 
 
-def _binary_meta_kernel(batches):
-    import pandas as pd
-
-    for pdf in batches:
-        out = {"url": [], "n_bytes": [], "kind": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            b = bytes(html)
-            if b[:2] in (b"\xff\xfe", b"\xfe\xff"):
-                kind = "utf16-bom"
-            elif b[:9] == b"<!DOCTYPE":
-                kind = "html"
-            else:
-                kind = "unknown"
-            out["url"].append(url)
-            out["n_bytes"].append(len(b))
-            out["kind"].append(kind)
-        yield pd.DataFrame(out)
+def _binary_meta_one(html):
+    b = bytes(html)
+    if b[:2] in (b"\xff\xfe", b"\xfe\xff"):
+        kind = "utf16-bom"
+    elif b[:9] == b"<!DOCTYPE":
+        kind = "html"
+    else:
+        kind = "unknown"
+    return len(b), kind
 
 
 def q_multimodal_meta(spark, sf_dir):
@@ -566,24 +553,14 @@ def q_serialize_roundtrip(spark, sf_dir):
     """Serializer fidelity: serialize(parse(html)) must reproduce the
     source bytes for the template corpus (tokenizer positions + attr
     quoting + void rules together)."""
-    return _pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _roundtrip_kernel, schema="url string, roundtrip_ok boolean")
+    return ut.map_docs(_pages(spark, sf_dir), ["url"], "html",
+                       _roundtrip_one, "url string, roundtrip_ok boolean")
 
 
-def _roundtrip_kernel(batches):
-    import pandas as pd
-
-    from .dom.serializer import serialize
-    from .dom.treebuilder import TreeBuilder
-
-    for pdf in batches:
-        out = {"url": [], "roundtrip_ok": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            src = bytes(html).decode("utf-8")
-            doc = TreeBuilder().parse(src)
-            out["url"].append(url)
-            out["roundtrip_ok"].append(serialize(doc, doc.root) == src)
-        yield pd.DataFrame(out)
+def _roundtrip_one(html):
+    src = bytes(html).decode("utf-8")
+    doc = TreeBuilder().parse(src)
+    return (serialize(doc, doc.root) == src,)
 
 
 # ---------------------------------------------------------------------------
@@ -599,23 +576,17 @@ def _hostile_pages(spark, sf_dir):
 def q_hostile_serialize(spark, sf_dir):
     """serialize(parse(hostile_html)) vs the hand-derived spec tree —
     pins adoption-agency + fostering + tbody + foreign-content shape."""
-    return _hostile_pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(_hostile_pages(spark, sf_dir))
 
 
-def _serialize_kernel(batches):
-    import pandas as pd
+def _serialize_one(html):
+    doc = ex.parse_document(bytes(html))
+    return (serialize(doc, doc.root),)
 
-    from .dom.serializer import serialize
-    from .operators.extract import parse_document
 
-    for pdf in batches:
-        out = {"url": [], "html_out": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            doc = parse_document(bytes(html))
-            out["url"].append(url)
-            out["html_out"].append(serialize(doc, doc.root))
-        yield pd.DataFrame(out)
+def _serialized(pages):
+    return ut.map_docs(pages, ["url"], "html", _serialize_one,
+                       "url string, html_out string")
 
 
 def q_hostile_inner_text(spark, sf_dir):
@@ -641,8 +612,7 @@ def q_hostile2_serialize(spark, sf_dir):
     """serialize(parse(hostile2_html)) vs the hand-derived spec tree —
     pins template content, caption/colgroup, select-in-table fostering,
     attribute character-reference rules, MathML/SVG integration points."""
-    return _hostile2_pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(_hostile2_pages(spark, sf_dir))
 
 
 def q_hostile2_inner_text(spark, sf_dir):
@@ -668,8 +638,7 @@ def q_messy_serialize(spark, sf_dir):
     """The realistic frameless page (implied frames, form/select/
     marquee/template/pre/textarea/button) round-tripped against the
     hand-derived spec serialization."""
-    return _messy_pages(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(_messy_pages(spark, sf_dir))
 
 
 def q_messy_inner_text(spark, sf_dir):
@@ -698,8 +667,7 @@ def q_entity_text(spark, sf_dir):
 def q_entity_serialize(spark, sf_dir):
     """Entity re-escaping on serialization: text & < > re-escape (quotes
     don't), attrs re-escape & and double quote."""
-    return pg.entity_pages_df(spark, sf_dir).select("url", "html").mapInPandas(
-        _serialize_kernel, schema="url string, html_out string")
+    return _serialized(pg.entity_pages_df(spark, sf_dir))
 
 
 def q_compat_mode(spark, sf_dir):
@@ -708,22 +676,14 @@ def q_compat_mode(spark, sf_dir):
     docs = pg.read_docs(spark, sf_dir)
     df = ut.sql_over(
         lambda v: pg.doctype_variant_select_sql(pg.SPARK, v), docs)
-    return df.selectExpr("url", "encode(html_str, 'utf-8') as html").mapInPandas(
-        _compat_kernel, schema="url string, compat string")
+    return ut.map_docs(
+        df.selectExpr("url", "encode(html_str, 'utf-8') as html"), ["url"],
+        "html", _compat_one, "url string, compat string")
 
 
-def _compat_kernel(batches):
-    import pandas as pd
-
-    from .operators.extract import parse_document
-
-    for pdf in batches:
-        out = {"url": [], "compat": []}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            doc = parse_document(bytes(html))
-            out["url"].append(url)
-            out["compat"].append("BackCompat" if doc.quirks else "CSS1Compat")
-        yield pd.DataFrame(out)
+def _compat_one(html):
+    doc = ex.parse_document(bytes(html))
+    return ("BackCompat" if doc.quirks else "CSS1Compat",)
 
 
 # ---------------------------------------------------------------------------

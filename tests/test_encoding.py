@@ -30,6 +30,14 @@ def test_detect_bom_and_cut():
     assert name == "UTF-16LE"
 
 
+def test_detect_auto():
+    # BOM: the BOM names the encoding and is cut off
+    assert enc.detect_auto(b"\xef\xbb\xbf<p>x") == ("UTF-8", b"<p>x")
+    # no BOM: the content heuristic decides and the bytes stay whole
+    assert enc.detect_auto(CP1251_SAMPLE) == ("WINDOWS-1251", CP1251_SAMPLE)
+    assert enc.detect_auto(b"<p>ascii</p>") == (None, b"<p>ascii</p>")
+
+
 def test_detect_by_charset():
     assert enc.detect_by_charset("text/html; charset=windows-1251") == \
         "WINDOWS-1251"

@@ -539,3 +539,30 @@ def test_select_html_attr_merge():
         "<table><select><html a=b>z",
     ):
         assert_equal_trees(src)
+
+
+def test_deep_table_nesting_bails_to_full_machine(monkeypatch):
+    """The lane's table handlers recurse once per level; past the
+    interpreter's recursion limit it must bail, not raise (a raise
+    would make the extraction kernel emit an empty row)."""
+    import sys
+
+    from perl_html5_dom_spark.operators.extract import extract_one
+
+    depth = 400
+    src = ("<!DOCTYPE html><html><head></head><body>"
+           + "<table><tr><td>" * depth + "x"
+           + "</td></tr></table>" * depth + "</body></html>")
+    # pin the interpreter default: other tests' tooling may have left
+    # the limit raised, and 400 levels must overflow the lane
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        assert fastparse.try_parse(src) is None
+        assert_equal_trees(src)
+        got = extract_one(src.encode())
+    finally:
+        sys.setrecursionlimit(limit)
+    monkeypatch.setattr(fastparse, "try_parse", lambda s: None)
+    assert got == extract_one(src.encode())
+    assert got["inner_text"].strip() == "x"

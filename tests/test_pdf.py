@@ -386,3 +386,48 @@ def test_content_stream_stray_delims_and_dict_operand():
         b"] } BT /F1 12 Tf 72 700 Td "
         b"/Tag << /K 1 >> BDC (x) Tj ET")
     assert spans == [(700.0, 72.0, "x")]
+
+
+# ---------------------------------------------------------------------------
+# whitespace/comment tails: the leading ws/comment run of the token
+# regexes is possessive, so a long tail where no token follows fails in
+# linear time instead of backtracking through every way to split it
+# ---------------------------------------------------------------------------
+
+_TAILS = [b"\n" * 40, b"%\n" * 20, b"%comment\n" * 4 + b"\n" * 4]
+
+
+def _timed(fn):
+    import time
+
+    t0 = time.perf_counter()
+    out = fn()
+    assert time.perf_counter() - t0 < 0.5
+    return out
+
+
+@pytest.mark.parametrize("tail", _TAILS)
+def test_content_stream_tail_is_linear(tail):
+    content = b"BT 10 700 Td (tail) Tj ET"
+    assert _timed(lambda: run_content(content + tail)) == "tail"
+    assert _timed(lambda: run_content(tail + content + tail)) == "tail"
+
+
+@pytest.mark.parametrize("tail", _TAILS)
+def test_object_syntax_tail_is_linear(tail):
+    from perl_html5_dom_spark.dom.pdf import Name, _Lexer
+
+    lex = _Lexer(b"7" + tail)
+    assert lex.read_object() == 7
+    with pytest.raises(PdfError):
+        _timed(lex.read_object)  # only the tail is left
+    with pytest.raises(PdfError):
+        _timed(_Lexer(b"<< /A 1" + tail).read_object)  # truncated dict
+    assert _timed(_Lexer(b"<< /A 1" + tail + b">>").read_object) == {
+        "A": 1}
+    assert _timed(_Lexer(b"[/A" + tail + b"]").read_object) == [Name("A")]
+    # the tail inside a page dict of a whole file
+    objs = one_page(b"BT 10 700 Td (obj) Tj ET")
+    objs[3] = (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R" + tail
+               + b">>")
+    assert _timed(lambda: extract_pdf_text(build_pdf(objs))) == (1, "obj")

@@ -10,6 +10,10 @@ doctypes, attribute junk — checked per document:
   3. chunked parse at a random split == whole-string parse
   4. inner_text / text_content never crash
 
+One document in ``DEEP_EVERY`` nests tables and divs 300-500 deep
+instead: past the interpreter's recursion limit the fast lane must bail
+to the full machine, never raise.
+
 Multiprocess over all cores with distinct seeds; failures are saved to
 /tmp/fuzz_failures/ for triage.  Usage:
 
@@ -97,6 +101,25 @@ def gen_doc(rng: random.Random) -> str:
     return "".join(parts)
 
 
+#: one deep-nesting document per this many generated documents
+DEEP_EVERY = 50
+
+_DEEP_LEVELS = [("<table><tr><td>", "</td></tr></table>"), ("<div>", "</div>"),
+                ("<table><td>", "</table>")]
+
+
+def gen_deep_doc(rng: random.Random) -> str:
+    """Tables or divs (or a mix) nested 300-500 deep, with text at
+    random levels and the closing tags present, partial or missing."""
+    kinds = rng.choice([_DEEP_LEVELS[:1], _DEEP_LEVELS[1:2], _DEEP_LEVELS])
+    levels = [rng.choice(kinds) for _ in range(rng.randint(300, 500))]
+    opens = "".join(o + ("x" if rng.random() < 0.05 else "")
+                    for o, _ in levels)
+    closes = "".join(c for _, c in reversed(levels))
+    closes = closes[:rng.randint(0, len(closes))]
+    return rng.choice(_HEADS) + opens + "deep" + closes + rng.choice(_TAILS)
+
+
 def _setup_paths() -> None:
     """Once per worker process, not per document (ADVICE r4: the old
     per-document inserts grew sys.path unboundedly over a campaign)."""
@@ -169,7 +192,7 @@ def worker(seed: int, seconds: float, out_dir: str) -> tuple[int, int]:
     t_end = time.time() + seconds
     n = fails = 0
     while time.time() < t_end:
-        src = gen_doc(rng)
+        src = gen_deep_doc(rng) if n % DEEP_EVERY == 0 else gen_doc(rng)
         try:
             label = check_one(src)
         except Exception as e:  # crash = failure too
