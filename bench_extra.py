@@ -112,7 +112,7 @@ def main() -> None:
 
     if want("simhash"):
         bench("simhash_fingerprints_noop",
-              lambda: noop(dedup.simhash(corpus, 32)))
+              lambda: noop(dedup.simhash(corpus)))
         bench("simhash_near_dups", lambda: dedup.simhash_near_dups(
             corpus, 3).count())
 
@@ -121,17 +121,10 @@ def main() -> None:
             corpus.agg(F.count("*"), F.approx_count_distinct("text")).first()
         bench("minhash_probe", _probe)
 
-        def _sh():
-            sh = dedup._shingles(corpus, 3).selectExpr(
-                "doc_id", f"{dedup.H('shingle')} as hs")
-            noop(sh)
-        bench("minhash_shingles_hashed_noop", _sh)
-
-        def _sig():
-            sh = dedup._shingles(corpus, 3).selectExpr(
-                "doc_id", f"{dedup.H('shingle')} as hs")
-            noop(dedup._band_keys(dedup._minhash_wide(sh, 16), 16, 4))
-        bench("minhash_sig_bands_noop", _sig)
+        bench("minhash_kernel_noop",
+              lambda: noop(dedup._doc_minhash_sets(corpus)))
+        bench("minhash_kernel_bands_noop",
+              lambda: noop(dedup.minhash_band_keys(corpus)))
 
         bench("minhash_near_dups", lambda: dedup.minhash_near_dups(
             corpus, 0.5).count())

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..util import spread_partitions
 from .dedup import H, _shingles
 
 SPARK = "spark"
@@ -70,17 +71,9 @@ def ngram_overlap(docs: DataFrame, bench: DataFrame, n: int = 5,
     n-gram table and its per-item sizes broadcast; matching is map-side
     against the big scan, and only hit pairs shuffle.
 
-    The document side is spread to the session's parallelism when the
-    input arrives with fewer partitions (a single-row-group parquet
-    file scans as ONE task, serializing the whole shingle+hash pass on
-    one core — the read_docs rationale); inputs already at or above
-    core count pass through untouched, so no shuffle is added at
-    scale."""
-    docs = docs.select("doc_id", "text")
-    n_parts = docs.rdd.getNumPartitions()
-    want_parts = docs.sparkSession.sparkContext.defaultParallelism
-    if n_parts < want_parts:
-        docs = docs.repartition(want_parts)
+    The map-side shingle+hash pass over the document side runs on at
+    least the session's parallelism (``util.spread_partitions``)."""
+    docs = spread_partitions(docs.select("doc_id", "text"))
     bsh = _shingles(
         bench.selectExpr("bench_id as doc_id", "bench_text as text"), k=n,
     ).selectExpr("doc_id as bench_id", f"{H('shingle')} as h")

@@ -1,9 +1,10 @@
 """Deduplication operators for web-scale training-data pipelines.
 
 Exact (hash groupBy), MinHash+LSH, SimHash and exact n-gram Jaccard —
-all as declarative DataFrame plans (shuffle only on their group keys, no
-Python in the hot path).  Every hash is derived from ``md5`` so DuckDB
-oracles can reproduce results bit-for-bit:
+declarative DataFrame plans that shuffle only on their group keys, with
+the per-document fingerprints in zero-shuffle Arrow kernels.  Every hash
+is derived from ``md5`` so DuckDB oracles can reproduce results
+bit-for-bit:
 
     H(s)  = first 60 bits of md5(s) as bigint        (cross-engine)
     Spark:  cast(conv(substr(md5(s),1,15),16,10) as bigint)
@@ -11,22 +12,36 @@ oracles can reproduce results bit-for-bit:
 
 Scale notes (100 TB):
   * exact dedup — one shuffle on the 128-bit digest; AQE handles skew.
-  * MinHash — shingle explode is map-side; signature = groupBy(doc, perm)
-    min() with partial aggregation; LSH banding turns the O(n²) pair
-    search into an equi-join on (band, key).  Common-shingle blowup is
-    bounded by ``max_df`` (drop shingles appearing in more docs — the
-    standard stop-shingle cut).
-  * SimHash — 32-bit fingerprint via one explode + two partial-agg
-    groupBys; near-dup search joins on 8-bit chunks (pigeonhole: any pair
-    with hamming ≤ 3 shares one of 4 chunks).
+  * MinHash — one zero-shuffle Arrow kernel (``_doc_minhash_sets``)
+    computes every signature: batch, candidate-only and streaming
+    callers all band its output with ``_band_keys``.  LSH banding turns
+    the O(n²) pair search into an equi-join on (band, key).
+  * Shingle Jaccard — common-shingle blowup is bounded by ``max_df``
+    (drop shingles appearing in more docs — the standard stop-shingle
+    cut).
+  * SimHash — 32-bit fingerprint from one zero-shuffle Arrow kernel;
+    near-dup search runs over distinct values with multi-index probes
+    (pigeonhole: a pair with hamming ≤ 2g-1 differs in ≤ 1 bit of one
+    of g bit groups), then expands value pairs back to doc pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..util import checkpoint_parquet, materialize
+
 #: modulus for minhash permutations (2^31 - 1, prime)
 P = 2_147_483_647
+
+#: MinHash-LSH shape: permutations, LSH bands, word-shingle length —
+#: the values the dedup_minhash_lsh and webtext_pipeline oracles use
+NUM_PERM = 16
+BANDS = 4
+SHINGLE_K = 3
+
+#: SimHash fingerprint width
+SIMHASH_BITS = 32
 
 #: 60-bit md5-derived hash, identical in DuckDB (see module docstring)
 def H(col: str) -> str:
@@ -63,14 +78,6 @@ def _shingles(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """persist + eager count: a DataFrame reused on both sides of a
-    self-join must be materialized BEFORE the join, or both sides race
-    to fill the cache and the upstream tree runs twice."""
-    df = df.persist()
-    df.count()
-    return df
-
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Duplicate groups by full-text digest: (text_md5, n_copies,
     keeper_id) for groups with >1 member; keeper = smallest doc_id."""
@@ -86,19 +93,14 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _minhash_wide(sh: DataFrame, num_perm: int = 16) -> DataFrame:
-    """(doc_id, mh0..mh{n-1}): all minhash rows in ONE partial-agg groupBy.
+def _minhash_wide(sh: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
+    """(doc_id, mh0..mh{n-1}): the declarative SQL reference twin of
+    ``_doc_minhash_sets``' signature columns, for tests only — no
+    operator calls it.
 
-    ``sh`` is the (doc_id, shingle) table.  md5 is computed once per
-    shingle in the projection below the aggregate; the ``num_perm`` mins
-    ride the same map-side combine — the shuffle carries one narrow row
-    per doc, not num_perm fan-out rows (the SimHash conditional-sum
-    pattern; replaces the round-1 broadcast-join fan-out that cost 54%
-    of the bench suite).
-
-    Accepts either (doc_id, shingle) strings or an already-hashed
-    (doc_id, hs) table — minhash_near_dups hashes once up front so the
-    verify join rides the same materialization."""
+    ``sh`` is the (doc_id, shingle) table from ``_shingles`` or an
+    already-hashed (doc_id, hs) table; all ``num_perm`` permutation
+    mins ride one partial-agg groupBy on doc_id."""
     if "hs" in sh.columns:
         hashed = sh.selectExpr("doc_id", f"hs % {P} as hs")
     else:
@@ -110,104 +112,14 @@ def _minhash_wide(sh: DataFrame, num_perm: int = 16) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, num_perm: int = 16, k: int = 3) -> DataFrame:
-    """(doc_id, j, mh): minhash row j of each doc's shingle set."""
-    wide = _minhash_wide(_shingles(docs, k), num_perm)
-    pairs = ", ".join(f"'{j}', mh{j}" for j in range(num_perm))
-    return wide.selectExpr(
-        "doc_id", f"stack({num_perm}, {pairs}) as (j, mh)"
-    ).selectExpr("doc_id", "cast(j as int) as j", "mh")
-
-
-def _band_keys(wide: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """(doc_id, band, bk1, bk2) from the wide signature — a pure
-    projection + explode(bands), no aggregation.  Band keys are
-    order-insensitive weighted sums matching the DuckDB oracle
-    (sum(mh*(j+1)), sum(mh) over the band's global j range)."""
-    rows = num_perm // bands
-    entries = []
-    for b in range(bands):
-        js = range(b * rows, (b + 1) * rows)
-        bk1 = " + ".join(f"mh{j} * {j + 1}" for j in js)
-        bk2 = " + ".join(f"mh{j}" for j in js)
-        entries.append(
-            f"struct({b} as band, cast({bk1} as bigint) as bk1, "
-            f"cast({bk2} as bigint) as bk2)")
-    return (
-        wide.selectExpr("doc_id", f"explode(array({', '.join(entries)})) as s")
-        .selectExpr("doc_id", "s.band as band", "s.bk1 as bk1", "s.bk2 as bk2")
-    )
-
-
-def lsh_candidate_pairs(docs: DataFrame, num_perm: int = 16, bands: int = 4,
-                        k: int = 3) -> DataFrame:
-    """(a, b) doc pairs sharing at least one LSH band bucket (a < b)."""
-    buckets = _materialize(  # self-joined below
-        _band_keys(_minhash_wide(_shingles(docs, k), num_perm), num_perm, bands))
-    l, r = buckets.alias("l"), buckets.alias("r")
-    return (
-        l.join(r, ["band", "bk1", "bk2"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
-
-
-def jaccard_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 3,
-                  max_df: int | None = 8) -> DataFrame:
-    """Shingle-Jaccard near-dup pairs (a, b, jaccard ≥ threshold) — the
-    default API, with the stop-shingle cut ON (``max_df``): shingles
-    seen in more than ``max_df`` docs are dropped before the self-join,
-    the standard cut that keeps the candidate fan-out linear at 100 TB.
-    ``jaccard_pairs_exact`` is the uncapped oracle gold standard.
-
-    Complete over kept shingles: any pair with jaccard > 0 over them
-    shares one, so the shingle equi-join generates every candidate."""
-    sh = _materialize(_shingles(docs, k))  # sizes + both join sides
-    if max_df is not None:
-        keep = sh.groupBy("shingle").count().filter(F.col("count") <= max_df)
-        sh = sh.join(keep.select("shingle"), "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        sh.alias("x").join(sh.alias("y"), "shingle")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    return _jaccard_from_inter(inter, sizes, threshold)
-
-
-def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5,
-                        k: int = 3) -> DataFrame:
-    """UNCAPPED shingle-Jaccard — the small-scale ORACLE gold standard
-    (not the default API; reach for ``jaccard_pairs``).  The shingle
-    self-join fan-out is quadratic in document frequency: correct for
-    oracle runs, a scale-killer beyond them."""
-    return jaccard_pairs(docs, threshold=threshold, k=k, max_df=None)
-
-
-def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame,
-                        threshold: float) -> DataFrame:
-    """(a, b, jaccard) from intersection counts + set sizes.
-
-    Filters on the UNROUNDED ratio (matching the oracle's order of
-    operations), then rounds for output."""
-    return (
-        inter
-        .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
-        .selectExpr("a", "b", "inter / (na + nb - inter) as j_raw")
-        .filter(F.col("j_raw") >= threshold)
-        .selectExpr("a", "b", "round(j_raw, 6) as jaccard")
-    )
-
-
-def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
+def _doc_minhash_sets(docs: DataFrame, num_perm: int = NUM_PERM,
+                      k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, mh0..mh{n-1}, hset): per-document minhash signature AND
     the distinct 60-bit shingle-hash array, in ONE zero-shuffle Arrow
     kernel pass — both are pure per-document functions of the shingle
     set, so nothing needs an exchange (the declarative form paid the
     shingle explode plus two aggregate exchanges for the same rows).
+    This is the engine's only MinHash signature path.
 
     Bit-exact twin of ``_minhash_wide(_shingles(docs,k) hashed)`` +
     ``collect_set(hs)``: same distinct shingle STRINGS (whole text
@@ -287,8 +199,123 @@ def _doc_minhash_sets(docs: DataFrame, num_perm: int, k: int) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
+def _band_keys(wide: DataFrame) -> DataFrame:
+    """(doc_id, band, bk1, bk2) from the wide signature — a pure
+    projection + explode(BANDS), no aggregation.  Band keys are
+    order-insensitive weighted sums matching the DuckDB oracle
+    (sum(mh*(j+1)), sum(mh) over the band's global j range)."""
+    rows = NUM_PERM // BANDS
+    entries = []
+    for b in range(BANDS):
+        js = range(b * rows, (b + 1) * rows)
+        bk1 = " + ".join(f"mh{j} * {j + 1}" for j in js)
+        bk2 = " + ".join(f"mh{j}" for j in js)
+        entries.append(
+            f"struct({b} as band, cast({bk1} as bigint) as bk1, "
+            f"cast({bk2} as bigint) as bk2)")
+    return (
+        wide.selectExpr("doc_id", f"explode(array({', '.join(entries)})) as s")
+        .selectExpr("doc_id", "s.band as band", "s.bk1 as bk1", "s.bk2 as bk2")
+    )
+
+
+def minhash_band_keys(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, bk1, bk2): each document's LSH band buckets — the
+    signature kernel banded by a pure projection, with no exchange, so
+    it runs unchanged on a streaming frame."""
+    return _band_keys(_doc_minhash_sets(docs))
+
+
+def _bucket_pairs(buckets: DataFrame) -> DataFrame:
+    """(a, b) doc pairs sharing at least one band bucket (a < b): the
+    band-bucket self-join."""
+    l, r = buckets.alias("l"), buckets.alias("r")
+    return (
+        l.join(r, ["band", "bk1", "bk2"])
+        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
+        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+        .distinct()
+    )
+
+
+def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
+    """(a, b) doc pairs sharing at least one LSH band bucket (a < b)."""
+    return _bucket_pairs(materialize(minhash_band_keys(docs)))  # self-joined
+
+
+def _expand_classes(class_pairs: DataFrame, members: DataFrame, key: str,
+                    value: str, same: str) -> DataFrame:
+    """Document pairs from duplicate-class pairs (output-sized, pure
+    joins/projections).
+
+    ``members`` is (doc_id, ``key``); ``class_pairs`` is (a, b,
+    ``value``) over class keys.  Cross-class pairs inherit their class
+    pair's ``value``; each class of m > 1 members contributes its own
+    m·(m-1)/2 pairs at the SQL expression ``same``."""
+    cross = (
+        class_pairs
+        .join(members.selectExpr("doc_id as x", f"{key} as a"), "a")
+        .join(members.selectExpr("doc_id as y", f"{key} as b"), "b")
+        .selectExpr("least(x, y) as a", "greatest(x, y) as b", value)
+    )
+    within = (
+        members.alias("l").join(members.alias("r"), key)
+        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
+        .selectExpr("l.doc_id as a", "r.doc_id as b", f"{same} as {value}")
+    )
+    return cross.unionAll(within)
+
+
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 3,
+                  max_df: int | None = 8) -> DataFrame:
+    """Shingle-Jaccard near-dup pairs (a, b, jaccard ≥ threshold) — the
+    default API, with the stop-shingle cut ON (``max_df``): shingles
+    seen in more than ``max_df`` docs are dropped before the self-join,
+    the standard cut that keeps the candidate fan-out linear at 100 TB.
+    ``jaccard_pairs_exact`` is the uncapped oracle gold standard.
+
+    Complete over kept shingles: any pair with jaccard > 0 over them
+    shares one, so the shingle equi-join generates every candidate."""
+    sh = materialize(_shingles(docs, k))  # sizes + both join sides
+    if max_df is not None:
+        keep = sh.groupBy("shingle").count().filter(F.col("count") <= max_df)
+        sh = sh.join(keep.select("shingle"), "shingle")
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    inter = (
+        sh.alias("x").join(sh.alias("y"), "shingle")
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+        .agg(F.count("*").alias("inter"))
+    )
+    return _jaccard_from_inter(inter, sizes, threshold)
+
+
+def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5,
+                        k: int = 3) -> DataFrame:
+    """UNCAPPED shingle-Jaccard — the small-scale ORACLE gold standard
+    (not the default API; reach for ``jaccard_pairs``).  The shingle
+    self-join fan-out is quadratic in document frequency: correct for
+    oracle runs, a scale-killer beyond them."""
+    return jaccard_pairs(docs, threshold=threshold, k=k, max_df=None)
+
+
+def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame,
+                        threshold: float) -> DataFrame:
+    """(a, b, jaccard) from intersection counts + set sizes.
+
+    Filters on the UNROUNDED ratio (matching the oracle's order of
+    operations), then rounds for output."""
+    return (
+        inter
+        .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
+        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
+        .selectExpr("a", "b", "inter / (na + nb - inter) as j_raw")
+        .filter(F.col("j_raw") >= threshold)
+        .selectExpr("a", "b", "round(j_raw, 6) as jaccard")
+    )
+
+
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
-                      num_perm: int = 16, bands: int = 4, k: int = 3,
                       collapse_exact: bool | None = None) -> DataFrame:
     """LSH candidates → exact Jaccard verification (a, b, jaccard).
 
@@ -300,7 +327,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
        buckets, and jaccard against any third doc — so the whole
        shingle/signature/verify machinery can run once per DISTINCT
        text (the class rep = min doc_id), with doc-level pairs
-       recovered by arithmetic expansion: rep-pair (ra, rb, j) fans
+       recovered by ``_expand_classes``: rep-pair (ra, rb, j) fans
        out to every (x in class a, y in class b), and each class of
        m > 1 contributes its own m·(m-1)/2 pairs at jaccard 1.0.
        Bit-for-bit equivalent to running on raw docs (candidate-ship
@@ -318,18 +345,20 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
        only shuffles are the bucket self-join, the candidate
        distinct, and the verify joins.
 
-    Hash semantics are engine-mirrored: both sides take distinct
+    ``docs`` needs (doc_id, text) columns.  Hash semantics are engine-mirrored: both sides take distinct
     shingle STRINGS per doc, then operate purely on H(shingle), so the
     DuckDB oracle reproduces counts bit-for-bit."""
-    tcol = "text" if "text" in docs.columns else docs.columns[-1]
     if collapse_exact is None:
         n, nd = docs.agg(
-            F.count("*"), F.approx_count_distinct(tcol)).first()
+            F.count("*"), F.approx_count_distinct("text")).first()
         collapse_exact = nd < 0.8 * n
     classes = None
     if collapse_exact:
-        classes = _materialize(  # (doc_id, rep); rep == class min doc_id
-            docs.selectExpr("doc_id", f"md5({tcol}) as tkey")
+        # null text pairs with nothing (its band keys are null), so it
+        # joins no class: md5(null) would put all such docs in one
+        classes = materialize(  # (doc_id, rep); rep == class min doc_id
+            docs.where("text is not null")
+            .selectExpr("doc_id", "md5(text) as tkey")
             .withColumn("rep",
                         F.min("doc_id").over(Window.partitionBy("tkey")))
             .select("doc_id", "rep"))
@@ -346,17 +375,8 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
     # persist 3.17s / parquet 2.68s / none 3.49s (util.checkpoint_parquet
     # rationale: repeated InMemoryRelation scans lose to vectorized
     # parquet reads, and the array column makes the rows wide-ish).
-    from ..util import checkpoint_parquet
-    wide = checkpoint_parquet(_doc_minhash_sets(docs, num_perm, k),
-                              "minhash_wide")
-    buckets = _band_keys(wide, num_perm, bands)
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(r, ["band", "bk1", "bk2"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    wide = checkpoint_parquet(_doc_minhash_sets(docs), "minhash_wide")
+    cand = _bucket_pairs(_band_keys(wide))
     # verify rides per-doc hash ARRAYS, not an exploded equi-join: the
     # old (cand x shingles) join shuffled one row per (pair, shingle) —
     # ~200x the candidate count — and its giant sort + hash-agg was
@@ -380,22 +400,8 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
     )
     if classes is None:
         return rep_pairs
-    # expansion back to doc pairs (output-sized, pure joins/projections):
-    # cross-class pairs inherit the rep pair's jaccard; each class of
-    # m > 1 members contributes its own pairs at exactly 1.0
-    cross = (
-        rep_pairs
-        .join(classes.selectExpr("doc_id as x", "rep as a"), "a")
-        .join(classes.selectExpr("doc_id as y", "rep as b"), "b")
-        .selectExpr("least(x, y) as a", "greatest(x, y) as b", "jaccard")
-    )
-    within = (
-        classes.alias("l").join(classes.alias("r"), "rep")
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .selectExpr("l.doc_id as a", "r.doc_id as b",
-                    "cast(1.0 as double) as jaccard")
-    )
-    return cross.unionAll(within)
+    return _expand_classes(rep_pairs, classes, "rep", "jaccard",
+                           "cast(1.0 as double)")
 
 
 # ---------------------------------------------------------------------------
@@ -505,7 +511,7 @@ def duplicated_ngrams(docs: DataFrame, k: int = 8,
             "else array() end) as (pos, gram)")
         .selectExpr("doc_id", "pos", f"{H('gram')} as h")
     )
-    grams = _materialize(grams)  # both sides of the flag join
+    grams = materialize(grams)  # both sides of the flag join
     # first occurrence as ONE bigint (pos < 2^20 by construction here;
     # the encoding only has to be order-isomorphic and engine-mirrored)
     stats = grams.groupBy("h").agg(
@@ -524,8 +530,9 @@ def duplicated_ngrams(docs: DataFrame, k: int = 8,
     )
 
 
-def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
-    """(doc_id, simhash): weighted-token sign fingerprint.
+def simhash(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash): ``SIMHASH_BITS``-bit weighted-token sign
+    fingerprint.
 
     Round-6 shape: the fingerprint is a PER-DOCUMENT function (token
     counts × md5-derived sign vectors, all integer arithmetic), so it
@@ -540,16 +547,14 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     the same H() (first 15 md5 hex digits as int), weights are exact
     counts, sums are integers, and ``bit set ⇔ sum > 0`` — pinned by
     ``test_simhash_matches_sql_form``."""
-    bit_count = bits
-
     def run(batches):
         from hashlib import md5
 
         import numpy as np
         import pandas as pd
 
-        shifts = np.arange(bit_count, dtype=np.uint64)
-        mask = (1 << bit_count) - 1
+        shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
+        mask = (1 << SIMHASH_BITS) - 1
         for pdf in batches:
             hmemo: dict = {}
             tmemo: dict = {}      # text -> distinct index (round-6
@@ -641,7 +646,7 @@ def connected_components(pairs: DataFrame, nodes: DataFrame | None = None,
     # groupBy mins collapse repeats MAP-SIDE (partial aggregation),
     # so the old edges.distinct() paid a full extra shuffle of the
     # edge table to remove rows the aggregates absorb for free.
-    edges = _materialize(pairs.selectExpr(
+    edges = materialize(pairs.selectExpr(
         "explode(array(struct(a as u, b as v), "
         "struct(b as u, a as v))) as e").select("e.u", "e.v"))
     # initial labels already carry round 0's neighbor minimum: comp =
@@ -710,8 +715,7 @@ def dedup_keep(docs: DataFrame, pairs: DataFrame,
         "node = comp as keep")
 
 
-def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
-                      bits: int = 32, chunks: int = 4) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(a, b, hamming ≤ max_hamming): SimHash near-dup pairs.
 
     Round-6 shape — two exact reductions on top of the plain
@@ -725,28 +729,29 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
        doc pairs are recovered afterwards by expansion — cross-class
        pairs inherit the value pair's hamming, same-value classes
        contribute their m·(m-1)/2 pairs at hamming 0 (trivially
-       candidates: equal values share every chunk).  Dense buckets
-       shrink QUADRATICALLY (sf1: Σ n_b² 1.24G → Σ d_b² 0.37G).
+       candidates: equal values share every chunk); the same
+       ``_expand_classes`` step as ``minhash_near_dups``.  Dense
+       buckets shrink QUADRATICALLY (sf1: Σ n_b² 1.24G → Σ d_b² 0.37G).
     2. MULTI-INDEX PROBES (multi-index Hamming search: Norouzi et al.
-       2012; HmSearch): split the ``bits`` into g groups such that
+       2012; HmSearch): split the ``SIMHASH_BITS`` into g groups so
        2g-1 ≥ max_hamming; a qualifying pair has ≤1 differing bit in
        SOME group (pigeonhole), so an equi-join of exact group keys
        against {key} ∪ {key ^ bit} probes finds every pair while
        requiring (width-1)-of-width bit agreement — far more selective
        than 8-bit chunk equality (sf1: 68M candidate rows vs 618M).
 
-    The ``chunks`` parameter of the legacy chunk join is kept for API
-    compatibility; exactness now rests on the group count derived from
-    ``max_hamming`` alone.  The bit_count filter runs map-side before
-    the value-pair distinct (filter∘distinct = distinct∘filter), so
-    the only wide exchanges carry value pairs and the output itself."""
-    sh = _materialize(simhash(docs, bits))   # (doc_id, simhash): reused
+    Exactness rests on the group count derived from ``max_hamming``
+    alone.  The bit_count filter runs map-side before the value-pair
+    distinct (filter∘distinct = distinct∘filter), so the only wide
+    exchanges carry value pairs and the output itself."""
+    sh = materialize(simhash(docs))   # (doc_id, simhash): reused
     # materialized: feeds the probe AND exact index sides (and gives
     # AQE the true ~|values| size so the index join broadcasts)
-    vals = _materialize(sh.select("simhash").distinct())
-    # g groups of ~bits/g; 1-bit probes cover hamming <= 2g-1
+    vals = materialize(sh.select("simhash").distinct())
+    # g groups of ~SIMHASH_BITS/g; 1-bit probes cover hamming <= 2g-1
     g = max_hamming // 2 + 1
-    widths = [bits // g + (1 if i < bits % g else 0) for i in range(g)]
+    widths = [SIMHASH_BITS // g + (1 if i < SIMHASH_BITS % g else 0)
+              for i in range(g)]
     offs = [sum(widths[:i]) for i in range(g)]
     exact_entries, probe_entries = [], []
     for h, (w, o) in enumerate(zip(widths, offs)):
@@ -769,8 +774,8 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
     vpairs = (
         probe.alias("l").join(exact.alias("r"), ["h", "key"])
         .filter(F.col("l.simhash") < F.col("r.simhash"))
-        .select(F.col("l.simhash").alias("va"),
-                F.col("r.simhash").alias("vb"),
+        .select(F.col("l.simhash").alias("a"),
+                F.col("r.simhash").alias("b"),
                 F.expr("cast(bit_count(l.simhash ^ r.simhash) as bigint)")
                 .alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
@@ -778,16 +783,6 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
     )
     # materialized: the candidate stage (the expensive one) must run
     # exactly once and hand AQE its true size before the expansion joins
-    vpairs = _materialize(vpairs)
-    cross = (
-        vpairs.join(sh.selectExpr("doc_id as x", "simhash as va"), "va")
-        .join(sh.selectExpr("doc_id as y", "simhash as vb"), "vb")
-        .selectExpr("least(x, y) as a", "greatest(x, y) as b", "hamming")
-    )
-    within = (
-        sh.alias("l").join(sh.alias("r"), "simhash")
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .selectExpr("l.doc_id as a", "r.doc_id as b",
-                    "cast(0 as bigint) as hamming")
-    )
-    return cross.unionAll(within)
+    vpairs = materialize(vpairs)
+    return _expand_classes(vpairs, sh, "simhash", "hamming",
+                           "cast(0 as bigint)")

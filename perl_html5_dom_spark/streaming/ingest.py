@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.dedup import minhash_band_keys
 from ..operators.extract import extract_pages
 
 PAGES_SCHEMA = (
@@ -99,66 +100,31 @@ def _bucket_state_fn(key, pdfs, state):
     yield pd.DataFrame(out, columns=["doc_id", "band", "bk1", "bk2", "dup"])
 
 
-def near_dup_stream(docs: DataFrame, num_perm: int = 16,
-                    bands: int = 4, k: int = 3) -> DataFrame:
+def near_dup_stream(docs: DataFrame) -> DataFrame:
     """Streaming MinHash-LSH near-dup candidates at ingest: per arriving
     document, one row per LSH band bucket with ``dup`` = true when a
     document from ANY earlier micro-batch (or earlier in this batch, by
     doc_id) already claimed that bucket.  A doc with any(dup) is a
     near-dup CANDIDATE — the same recall contract as the batch
-    ``lsh_candidate_pairs`` (same signatures, same band keys, so a pair
-    the batch path buckets together is flagged here once its second
-    member arrives).  Precision filtering (exact-jaccard verify) stays
-    a batch concern: per-bucket state holds ONE long, not shingle sets,
-    which is what keeps 10^12-document state viable.
+    ``lsh_candidate_pairs`` (same signature kernel, same band keys via
+    ``dedup.minhash_band_keys``, so a pair the batch path buckets
+    together is flagged here once its second member arrives).
+    Precision filtering (exact-jaccard verify) stays a batch concern:
+    per-bucket state holds ONE long, not shingle sets, which is what
+    keeps 10^12-document state viable.
 
-    Roll up per document downstream (e.g. in foreachBatch):
-    ``flagged.groupBy("doc_id").agg(max(col("dup")))``.
+    The band keys come from a stateless Arrow kernel plus a projection,
+    so the only stateful operator in the streaming plan is the bucket
+    store below.  Roll up per document downstream (e.g. in
+    foreachBatch): ``flagged.groupBy("doc_id").agg(max(col("dup")))``.
 
     State: one row per distinct (band, bk1, bk2) bucket, each a single
     bigint — bounded by corpus novelty, survives restarts via the
     checkpoint."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..operators.dedup import H, P, perm_params, tokens_expr
-
-    # signatures as a PURE PROJECTION (array_min over the per-doc
-    # shingle array) — numerically identical to the batch explode +
-    # partial-agg path, but stateless, so the only stateful operator in
-    # the streaming plan is the bucket store below.  (The batch path
-    # keeps the explode because its materialized shingle table also
-    # feeds the exact-jaccard verify join.)
-    parts = " || ' ' || ".join(f"element_at(t, i + {d})" for d in range(k))
-    sigs = []
-    for j in range(num_perm):
-        a, b = perm_params(j)
-        sigs.append(f"array_min(transform(sh, s -> "
-                    f"({a} * ({H('s')} % {P}) + {b}) % {P})) as mh{j}")
-    wide = (
-        docs.selectExpr("doc_id", "text as _txt", f"{tokens_expr()} as t")
-        .selectExpr(
-            "doc_id",
-            f"array_distinct(case when size(t) >= {k} then "
-            f"transform(sequence(1, size(t) - {k - 1}), i -> {parts}) "
-            "else array(_txt) end) as sh")
-        .selectExpr("doc_id", *sigs)
-    )
-    rows = num_perm // bands
-    entries = []
-    for b in range(bands):
-        js = range(b * rows, (b + 1) * rows)
-        bk1 = " + ".join(f"mh{j} * {j + 1}" for j in js)
-        bk2 = " + ".join(f"mh{j}" for j in js)
-        entries.append(f"struct({b} as band, cast({bk1} as bigint) as bk1, "
-                       f"cast({bk2} as bigint) as bk2)")
-    buckets = (
-        wide.selectExpr("doc_id",
-                        f"explode(array({', '.join(entries)})) as s")
-        .selectExpr("doc_id", "s.band as band", "s.bk1 as bk1",
-                    "s.bk2 as bk2")
-    )
     return (
-        buckets.groupBy("band", "bk1", "bk2")
+        minhash_band_keys(docs).groupBy("band", "bk1", "bk2")
         .applyInPandasWithState(
             _bucket_state_fn,
             outputStructType=_BUCKET_OUT,

@@ -5,6 +5,9 @@ SparkSession hygiene helpers.
 per-document kernel (extraction, node table, CSS matching, PDF text,
 quality counts) runs through it, and so does the batch-local memo that
 computes each distinct document once per Arrow batch.
+:func:`materialize`, :func:`spread_partitions` and
+:func:`checkpoint_parquet` are the shared plan-shaping helpers of the
+operators.
 
 Several operators lower dialect-portable SQL (the same text a DuckDB
 oracle runs) onto Spark via temp views.  A fixed view name is fine for
@@ -120,6 +123,30 @@ def sql_over(builder: Callable[..., str], *dfs: DataFrame,
     finally:
         for n in names:
             spark.catalog.dropTempView(n)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """persist + eager count: a DataFrame reused on both sides of a
+    self-join must be materialized BEFORE the join, or both sides race
+    to fill the cache and the upstream tree runs twice."""
+    df = df.persist()
+    df.count()
+    return df
+
+
+def spread_partitions(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the session's default parallelism when it
+    arrives with fewer partitions; otherwise return it untouched.
+
+    For operators whose heavy work runs map-side in the scan tasks.
+    Small inputs here are single-row-group parquet files, which scan
+    as ONE task and would serialize that work on one core; real-scale
+    inputs arrive split at or above core count and pass through, so no
+    shuffle is added at scale."""
+    want = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < want:
+        df = df.repartition(want)
+    return df
 
 
 def checkpoint_parquet(df: DataFrame, prefix: str = "ckpt") -> DataFrame:

@@ -35,6 +35,47 @@ def test_minhash_is_subset_of_exact_jaccard(spark, corpus):
     assert planted <= lsh
 
 
+def test_minhash_collapse_matches_plain_path(spark, corpus):
+    """The exact-dup collapse (class reps, then _expand_classes back to
+    doc pairs) must give the same (a, b, jaccard) rows as the plain
+    path; the auto probe never picks it on this corpus.  Two null
+    texts must not form a class: they pair on neither path."""
+    from perl_html5_dom_spark.operators.dedup import minhash_near_dups
+
+    edge = spark.createDataFrame(
+        [(9400001, None), (9400002, None), (9400003, "p q r s"),
+         (9400004, "p q r s")], "doc_id long, text string")
+
+    def rows(docs, collapse):
+        return sorted(tuple(r) for r in minhash_near_dups(
+            docs, 0.5, collapse_exact=collapse).collect())
+
+    collapsed = rows(corpus, True)
+    assert collapsed == rows(corpus, False)
+    # the planted exact copies (id, id+100000) are within-class pairs
+    planted = {(a, a + 100000, 1.0) for a in range(0, 100000, 5)}
+    assert planted & set(collapsed)
+
+    small = corpus.select("doc_id", "text").limit(40).unionAll(edge)
+    collapsed = rows(small, True)
+    assert collapsed == rows(small, False)
+    assert (9400003, 9400004, 1.0) in collapsed
+    assert not {(9400001, 9400002)} & {r[:2] for r in collapsed}
+
+
+def test_minhash_near_dups_requires_text(spark, corpus):
+    """No fallback to another column: a frame without ``text`` fails
+    at analysis, on both the collapse and the plain path."""
+    from pyspark.errors import AnalysisException
+
+    from perl_html5_dom_spark.operators.dedup import minhash_near_dups
+
+    body = corpus.withColumnRenamed("text", "body")
+    for collapse in (None, True, False):
+        with pytest.raises(AnalysisException):
+            minhash_near_dups(body, 0.5, collapse_exact=collapse)
+
+
 def test_simhash_identical_docs_zero_hamming(spark, corpus):
     from perl_html5_dom_spark.operators.dedup import simhash
 

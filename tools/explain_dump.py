@@ -79,13 +79,6 @@ def main() -> None:
          "parquet is ONE row group = one scan task); real-scale inputs "
          "pass through with no extra Exchange.")
 
-    grab("MinHash signatures: single-pass partial aggregation",
-         dedup.minhash_signatures(docs.selectExpr("doc_id", "text")),
-         "explode(shingles) + md5 hash are map-side; ONE groupBy(doc_id) "
-         "computes all 16 per-permutation mins as columns (partial_min "
-         "before the exchange) — no perm fan-out join; the (j, mh) rows "
-         "are a stack() of the wide result.")
-
     grab("LSH buckets: engine-side planes, broadcast join",
          similarity.lsh_buckets(emb),
          "Plane components derived from md5 inside the plan (transform "
