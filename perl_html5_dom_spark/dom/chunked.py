@@ -116,12 +116,9 @@ class ChunkedParser:
             tb._dispatch(token)
 
 
-def parse_chunked(chunks, encoding_name: str | None = None) -> Document:
+def parse_chunked(chunks) -> Document:
     """Convenience: parse an iterable of str chunks to a Document."""
     p = ChunkedParser()
     for c in chunks:
         p.parse_chunk(c)
-    doc = p.end()
-    if encoding_name:
-        doc.encoding = encoding_name
-    return doc
+    return p.end()

@@ -40,7 +40,6 @@ NAMESPACE_NAMES = {
     NS_XMLNS: "XMLNS",
     NS_ANY: "ANY",
 }
-NAMESPACE_IDS = {v: k for k, v in NAMESPACE_NAMES.items()}
 
 # ---------------------------------------------------------------------------
 # Void elements (HTML spec; reference behavior DOM.xs:2145-2151)
@@ -55,7 +54,6 @@ VOID_TAGS = frozenset(
 # ---------------------------------------------------------------------------
 RAWTEXT_TAGS = frozenset("style xmp iframe noembed noframes noscript".split())
 RCDATA_TAGS = frozenset("title textarea".split())
-SCRIPT_TAG = "script"
 
 # Elements whose text children serialize without escaping (WHATWG serializer)
 LITERAL_TEXT_TAGS = frozenset(
@@ -90,15 +88,6 @@ IMPLIED_END_TAGS = frozenset(
 IMPLIED_END_TAGS_THOROUGH = IMPLIED_END_TAGS | frozenset(
     "caption colgroup tbody td tfoot th thead tr".split()
 )
-
-# Scope definitions (WHATWG "has an element in X scope")
-SCOPE_BASE = frozenset(
-    "applet caption html table td th marquee object template".split()
-)
-LIST_ITEM_SCOPE_EXTRA = frozenset(["ol", "ul"])
-BUTTON_SCOPE_EXTRA = frozenset(["button"])
-TABLE_SCOPE = frozenset(["html", "table", "template"])
-SELECT_SCOPE_INVERT = frozenset(["optgroup", "option"])  # everything else ends scope
 
 # ---------------------------------------------------------------------------
 # UA display table — mirrors /root/reference/gen/tags_ua_style.c and the

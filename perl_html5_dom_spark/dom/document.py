@@ -184,13 +184,6 @@ class Document:
         self.next_sib[node] = NULL
         self._dirty = True
 
-    def prepend_child(self, parent: int, child: int) -> None:
-        first = self.first_child[parent]
-        if first != NULL:
-            self.insert_before(first, child)
-        else:
-            self.append_child(parent, child)
-
     # ------------------------------------------------------------------
     # traversal helpers
     # ------------------------------------------------------------------
@@ -223,20 +216,6 @@ class Document:
             if not stack:
                 return
             c = stack.pop()
-
-    def ancestors(self, node: int):
-        p = self.parent[node]
-        while p != NULL:
-            yield p
-            p = self.parent[p]
-
-    def is_descendant(self, node: int, ancestor: int) -> bool:
-        p = self.parent[node]
-        while p != NULL:
-            if p == ancestor:
-                return True
-            p = self.parent[p]
-        return False
 
     # ------------------------------------------------------------------
     # finalize: preorder order + subtree intervals (document order index)
@@ -285,12 +264,6 @@ class Document:
     def subtree_end(self) -> list[int]:
         self.ensure_order()
         return self._subtree_end  # type: ignore[return-value]
-
-    def doc_sort(self, nodes: list[int]) -> list[int]:
-        """Sort node handles into document order (detached nodes last)."""
-        self.ensure_order()
-        op = self._order_pos
-        return sorted(nodes, key=lambda n: (op[n] == NULL, op[n]))
 
     def __len__(self) -> int:
         return len(self.tag)

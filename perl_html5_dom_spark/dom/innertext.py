@@ -39,8 +39,7 @@ from .constants import (
 )
 from .document import NULL, Document
 
-# collapsible whitespace per the reference's isspace() minus NBSP
-_COLLAPSIBLE = frozenset(" \t\n\x0b\x0c")
+# collapsible whitespace runs per the reference's isspace() minus NBSP
 _WS_RUN_RE = re.compile(r"[ \t\n\x0b\x0c]+")
 _SKIP_TAGS = frozenset(("textarea", "input", "audio", "video"))
 _BOUNDARY = (DISPLAY_BLOCK, DISPLAY_TABLE, DISPLAY_TABLE_CAPTION)

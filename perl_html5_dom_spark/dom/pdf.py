@@ -43,7 +43,6 @@ import zlib
 __all__ = ["PdfError", "PdfParser", "extract_pdf_text", "pdf_page_count"]
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 _NAME_HASH = re.compile(rb"#([0-9A-Fa-f]{2})")
 # C-speed scanners for the lexer hot loops (round 6): one regex match

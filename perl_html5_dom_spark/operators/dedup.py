@@ -43,6 +43,9 @@ SHINGLE_K = 3
 #: SimHash fingerprint width
 SIMHASH_BITS = 32
 
+#: label-propagation round cap of ``connected_components``
+CC_MAX_ITER = 25
+
 #: 60-bit md5-derived hash, identical in DuckDB (see module docstring)
 def H(col: str) -> str:
     return f"cast(conv(substr(md5({col}), 1, 15), 16, 10) as bigint)"
@@ -55,16 +58,17 @@ def perm_params(j: int) -> tuple[int, int]:
     return (a if a else 1, b)
 
 
-def tokens_expr(text_col: str = "text") -> str:
-    return f"split({text_col}, ' ')"
+def tokens_expr() -> str:
+    """Whitespace tokens of a document's ``text``."""
+    return "split(text, ' ')"
 
 
-def _shingles(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
+def _shingles(df: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, shingle) — distinct word k-grams per doc; the whole text
     is the single shingle when a doc has fewer than k tokens."""
     parts = " || ' ' || ".join(f"element_at(t, i + {d})" for d in range(k))
     return (
-        df.selectExpr("doc_id", f"{text_col} as _txt", f"{tokens_expr(text_col)} as t")
+        df.selectExpr("doc_id", "text as _txt", f"{tokens_expr()} as t")
         .selectExpr(
             "doc_id",
             f"explode(array_distinct(case when size(t) >= {k} then "
@@ -78,11 +82,11 @@ def _shingles(df: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Duplicate groups by full-text digest: (text_md5, n_copies,
     keeper_id) for groups with >1 member; keeper = smallest doc_id."""
     return (
-        docs.select("doc_id", F.md5(F.col(text_col)).alias("text_md5"))
+        docs.select("doc_id", F.md5(F.col("text")).alias("text_md5"))
         .groupBy("text_md5")
         .agg(F.count("*").alias("n_copies"), F.min("doc_id").alias("keeper_id"))
         .filter(F.col("n_copies") > 1)
@@ -266,9 +270,9 @@ def _expand_classes(class_pairs: DataFrame, members: DataFrame, key: str,
     return cross.unionAll(within)
 
 
-def jaccard_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 3,
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
                   max_df: int | None = 8) -> DataFrame:
-    """Shingle-Jaccard near-dup pairs (a, b, jaccard ≥ threshold) — the
+    """3-shingle Jaccard near-dup pairs (a, b, jaccard ≥ threshold) — the
     default API, with the stop-shingle cut ON (``max_df``): shingles
     seen in more than ``max_df`` docs are dropped before the self-join,
     the standard cut that keeps the candidate fan-out linear at 100 TB.
@@ -276,7 +280,7 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 3,
 
     Complete over kept shingles: any pair with jaccard > 0 over them
     shares one, so the shingle equi-join generates every candidate."""
-    sh = materialize(_shingles(docs, k))  # sizes + both join sides
+    sh = materialize(_shingles(docs))  # sizes + both join sides
     if max_df is not None:
         keep = sh.groupBy("shingle").count().filter(F.col("count") <= max_df)
         sh = sh.join(keep.select("shingle"), "shingle")
@@ -290,13 +294,13 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 3,
     return _jaccard_from_inter(inter, sizes, threshold)
 
 
-def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5,
-                        k: int = 3) -> DataFrame:
-    """UNCAPPED shingle-Jaccard — the small-scale ORACLE gold standard
-    (not the default API; reach for ``jaccard_pairs``).  The shingle
-    self-join fan-out is quadratic in document frequency: correct for
-    oracle runs, a scale-killer beyond them."""
-    return jaccard_pairs(docs, threshold=threshold, k=k, max_df=None)
+def jaccard_pairs_exact(docs: DataFrame,
+                        threshold: float = 0.5) -> DataFrame:
+    """UNCAPPED 3-shingle Jaccard — the small-scale ORACLE gold
+    standard (not the default API; reach for ``jaccard_pairs``).  The
+    shingle self-join fan-out is quadratic in document frequency:
+    correct for oracle runs, a scale-killer beyond them."""
+    return jaccard_pairs(docs, threshold=threshold, max_df=None)
 
 
 def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame,
@@ -408,7 +412,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.5,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """C4-style cross-document line dedup: any line occurring in more
     than one place in the corpus survives only at its FIRST occurrence
     (lowest ``(doc_id, pos)``); every other copy is dropped, and each
@@ -427,7 +431,7 @@ def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     lines = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"))
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"))
     first = lines.groupBy("line").agg(
         F.min(F.struct("doc_id", "pos")).alias("f"))
     kept = (lines.join(first, "line")
@@ -439,9 +443,7 @@ def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 "struct(pos, line))), s -> s.line), '\n') as text_dedup")))
 
 
-def host_boilerplate(docs: DataFrame, min_docs: int = 3,
-                     url_col: str = "url",
-                     text_col: str = "text") -> DataFrame:
+def host_boilerplate(docs: DataFrame, min_docs: int = 3) -> DataFrame:
     """Site-template line removal (the CCNet/Dolma per-host pass, a
     finer rule than :func:`line_dedup`'s global-first-occurrence C4
     rule): a line is *host boilerplate* when the identical line occurs
@@ -465,8 +467,8 @@ def host_boilerplate(docs: DataFrame, min_docs: int = 3,
     """
     lines = docs.select(
         "doc_id",
-        F.expr(f"parse_url({url_col}, 'HOST')").alias("host"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"))
+        F.expr("parse_url(url, 'HOST')").alias("host"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"))
     boiler = (lines.groupBy("host", "line")
               .agg(F.countDistinct("doc_id").alias("n_docs"))
               .where(F.col("n_docs") >= min_docs)
@@ -483,8 +485,7 @@ def host_boilerplate(docs: DataFrame, min_docs: int = 3,
          .alias("n_removed")))
 
 
-def duplicated_ngrams(docs: DataFrame, k: int = 8,
-                      text_col: str = "text") -> DataFrame:
+def duplicated_ngrams(docs: DataFrame, k: int = 8) -> DataFrame:
     """Per-document corpus-duplication signal in the style of exact
     substring dedup (Lee et al. 2022, "Deduplicating Training Data
     Makes Language Models Better"), approximated at k-token
@@ -503,7 +504,7 @@ def duplicated_ngrams(docs: DataFrame, k: int = 8,
     Three narrow shuffles total, each carrying 8-byte keys."""
     parts = " || ' ' || ".join(f"element_at(t, i + {d})" for d in range(k))
     grams = (
-        docs.selectExpr("doc_id", f"{tokens_expr(text_col)} as t")
+        docs.selectExpr("doc_id", f"{tokens_expr()} as t")
         .selectExpr(
             "doc_id",
             f"posexplode(case when size(t) >= {k} then "
@@ -608,8 +609,8 @@ def simhash(docs: DataFrame) -> DataFrame:
         run, schema="doc_id bigint, simhash bigint")
 
 
-def connected_components(pairs: DataFrame, nodes: DataFrame | None = None,
-                         max_iter: int = 25) -> DataFrame:
+def connected_components(pairs: DataFrame,
+                         nodes: DataFrame | None = None) -> DataFrame:
     """(node, comp): connected components of the near-duplicate pair
     graph; comp = the smallest node id in the component.  ``nodes``
     optionally supplies the full id universe so isolated documents get
@@ -674,7 +675,7 @@ def connected_components(pairs: DataFrame, nodes: DataFrame | None = None,
     labels = (labels.observe(obs0, sig_expr)
               .localCheckpoint(eager=True))
     prev_sig = obs0.get["sig"]
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # neighbor minimum over edges ∪ self-loops: the self-loop side
         # (one (n, n) row per labeled node, a map-side union of two
         # materialized frames) makes the groupBy min yield
@@ -704,14 +705,13 @@ def connected_components(pairs: DataFrame, nodes: DataFrame | None = None,
     return labels.selectExpr("node", "comp")
 
 
-def dedup_keep(docs: DataFrame, pairs: DataFrame,
-               id_col: str = "doc_id") -> DataFrame:
+def dedup_keep(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """(doc_id, component, keep): canonical-representative selection —
     keep exactly one doc (the smallest id) per duplicate cluster; the
     downstream training corpus filters on ``keep``."""
-    comp = connected_components(pairs, nodes=docs.select(id_col))
+    comp = connected_components(pairs, nodes=docs.select("doc_id"))
     return comp.selectExpr(
-        f"node as {id_col}", "comp as component",
+        "node as doc_id", "comp as component",
         "node = comp as keep")
 
 

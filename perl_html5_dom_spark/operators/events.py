@@ -31,23 +31,28 @@ from pyspark.sql.window import Window
 #: session inactivity gap (seconds)
 SESSION_GAP_S = 30 * 60
 
+#: tumbling-window width of ``windowed_counts`` (a Spark interval string
+#: that DuckDB also reads after ``interval``)
+ROLLUP_WINDOW = "1 hour"
+
 #: tz-independent epoch microseconds for a TIMESTAMP_NTZ column (the
 #: parquet type here); matches DuckDB epoch_us exactly
 def _us(col: str) -> str:
     return f"timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', {col})"
 
 
-def sessionize(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """(user_id, session_idx, n_events, t_start_us, t_end_us, total_value)
 
     A new session starts when the gap to the user's previous event
-    exceeds ``gap_s``.  Deterministic tie-break: (ts, event_id)."""
+    exceeds ``SESSION_GAP_S``.  Deterministic tie-break: (ts, event_id)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # exact integer microsecond arithmetic — hashes identically in DuckDB
     us = F.expr(_us("ts"))
     flagged = events.withColumn(
         "new_session",
-        F.when(us - F.lag(us).over(w) > gap_s * 1_000_000, 1).otherwise(0),
+        F.when(us - F.lag(us).over(w) > SESSION_GAP_S * 1_000_000, 1)
+        .otherwise(0),
     ).withColumn(
         "session_idx",
         F.sum("new_session").over(
@@ -83,12 +88,12 @@ def sessionize_duck(events_rel: str = "events",
     )
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Tumbling event-time rollup per event_type: (window_start_us,
-    event_type, n, sum_value).  In streaming form the identical
-    expression runs after ``withWatermark('ts', ...)``."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Tumbling ``ROLLUP_WINDOW`` event-time rollup per event_type:
+    (window_start_us, event_type, n, sum_value).  In streaming form the
+    identical expression runs after ``withWatermark('ts', ...)``."""
     return (
-        events.groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.groupBy(F.window("ts", ROLLUP_WINDOW).alias("w"), "event_type")
         .agg(F.count("*").cast("bigint").alias("n"),
              F.round(F.sum("value"), 6).alias("sum_value"))
         .select(F.expr(_us("w.start")).alias("window_start_us"),
@@ -98,7 +103,8 @@ def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
 
 def windowed_counts_duck(events_rel: str = "events") -> str:
     return (
-        "select epoch_us(time_bucket(interval 1 hour, ts)) as window_start_us, "
+        f"select epoch_us(time_bucket(interval {ROLLUP_WINDOW}, ts)) "
+        "as window_start_us, "
         "event_type, cast(count(*) as bigint) as n, "
         "round(sum(value), 6) as sum_value "
         f"from {events_rel} group by 1, 2"

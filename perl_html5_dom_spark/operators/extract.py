@@ -194,14 +194,14 @@ EXTRACT_SCHEMA = (
 )
 
 
-def parse_document(html, parser_encoding: str | None = None) -> Document:
+def parse_document(html) -> Document:
     """bytes|str → Document via the encoding-sniffing pipeline
     (reference utils.c:620-649 semantics).
 
     Uses the optimistic fast-lane builder (dom/fastparse.py) which
     bails to the full insertion-mode machine on anything unusual —
     spec-identical by the differential test suite."""
-    encoding, text = enc.sniff_and_decode(html, encoding=parser_encoding)
+    encoding, text = enc.sniff_and_decode(html)
     doc = fastparse.parse(text)
     doc.encoding = encoding
     return doc

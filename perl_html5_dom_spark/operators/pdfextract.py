@@ -21,7 +21,7 @@ from ..util import map_docs
 PDF_SCHEMA = "url string, n_pages int, text string, err string"
 
 
-def extract_pdfs(df, pdf_col: str = "pdf"):
+def extract_pdfs(df):
     """DataFrame(url, pdf) → DataFrame(url, n_pages, text, err).
 
     The output is a pure function of the pdf bytes, so
@@ -36,4 +36,4 @@ def extract_pdfs(df, pdf_col: str = "pdf"):
             return 0, "", type(exc).__name__
         return n, text, None
 
-    return map_docs(df, ["url"], pdf_col, one, PDF_SCHEMA)
+    return map_docs(df, ["url"], "pdf", one, PDF_SCHEMA)

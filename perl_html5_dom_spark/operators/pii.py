@@ -64,13 +64,14 @@ def pii_messy_sql(dialect: str, source: str = "documents") -> str:
     )
 
 
-def _count_expr(pat: str, dialect: str, col: str = "text") -> str:
+def _count_expr(pat: str, dialect: str) -> str:
+    """Match count of ``pat`` in ``text``."""
     p = _lit(pat, dialect)
     # explicit group 0: Spark's default group index is 1 (errors when
     # the pattern has no capture group); DuckDB's is already 0
     if dialect == SPARK:
-        return f"cast(size(regexp_extract_all({col}, '{p}', 0)) as bigint)"
-    return f"cast(len(regexp_extract_all({col}, '{p}', 0)) as bigint)"
+        return f"cast(size(regexp_extract_all(text, '{p}', 0)) as bigint)"
+    return f"cast(len(regexp_extract_all(text, '{p}', 0)) as bigint)"
 
 
 def pii_scan_sql(dialect: str, source: str) -> str:
@@ -88,10 +89,10 @@ def pii_scan_sql(dialect: str, source: str) -> str:
     )
 
 
-def redact_expr(dialect: str, col: str = "text") -> str:
-    """Nested regexp_replace chain replacing every PII match with its
-    token (all-occurrence semantics in both engines)."""
-    e = col
+def redact_expr(dialect: str) -> str:
+    """Nested regexp_replace chain replacing every PII match in ``text``
+    with its token (all-occurrence semantics in both engines)."""
+    e = "text"
     for _, pat, token in PII_PATTERNS:
         p = _lit(pat, dialect)
         if dialect == SPARK:

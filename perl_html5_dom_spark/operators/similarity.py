@@ -9,8 +9,8 @@ reproduce values to rounding.
 Scale path: brute force is O(Q·N) per query batch — right for small Q
 with a broadcast query side.  The LSH variant buckets vectors by sign
 bits against deterministic md5-derived pseudo-hyperplanes, turning the
-scan into an equi-join on bucket keys; recall is tunable via tables ×
-bits (rows-only checked — the judge sees which).
+scan into an equi-join on bucket keys over ``LSH_TABLES`` tables of
+``LSH_BITS`` sign bits each.
 """
 
 from __future__ import annotations
@@ -18,6 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..util import materialize, spread_partitions
+
+#: LSH shape: sign bits per bucket key, bucket tables per search
+LSH_BITS = 8
+LSH_TABLES = 2
 
 COS = (
     "round(aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
@@ -61,12 +65,11 @@ def cosine_near_dups_exact(emb: DataFrame,
                            threshold: float = 0.95) -> DataFrame:
     """(a, b, cosine ≥ threshold): embedding near-duplicate pairs —
     EXACT all-pairs, the small-scale ORACLE gold standard (not the
-    default API; reach for ``cosine_near_dups``).
+    default API; reach for ``cosine_near_dups_lsh``).
 
     The self-join is a nested-loop cartesian: correct for oracle runs,
     a scale-killer beyond them.  The production path at 100 TB is
-    ``cosine_near_dups`` (= the LSH form: equi-join on bucket keys,
-    no NLJ)."""
+    ``cosine_near_dups_lsh`` (equi-join on bucket keys, no NLJ)."""
     l = emb.selectExpr("vec_id as a", "embedding as va")
     r = emb.selectExpr("vec_id as b", "embedding as vb")
     return (
@@ -94,7 +97,8 @@ def lsh_plane_component_duck(key: str) -> str:
     )
 
 
-def lsh_buckets(emb: DataFrame, bits: int = 8, table: int = 0) -> DataFrame:
+def lsh_buckets(emb: DataFrame, bits: int = LSH_BITS,
+                table: int = 0) -> DataFrame:
     """(vec_id, bucket): sign-random-projection bucket key.
 
     Pseudo-hyperplane components are derived ENGINE-SIDE from
@@ -122,7 +126,7 @@ def lsh_buckets(emb: DataFrame, bits: int = 8, table: int = 0) -> DataFrame:
     )
 
 
-def lsh_buckets_duck(emb_rel: str = "embeddings", bits: int = 8,
+def lsh_buckets_duck(emb_rel: str = "embeddings", bits: int = LSH_BITS,
                      table: int = 0) -> str:
     """DuckDB SELECT reproducing lsh_buckets exactly: (vec_id, bucket)."""
     comp = lsh_plane_component_duck(
@@ -141,16 +145,16 @@ def lsh_buckets_duck(emb_rel: str = "embeddings", bits: int = 8,
     )
 
 
-def cosine_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
-                         bits: int = 8, tables: int = 2) -> DataFrame:
+def cosine_near_dups_lsh(emb: DataFrame,
+                         threshold: float = 0.95) -> DataFrame:
     """(a, b, cosine ≥ threshold) restricted to LSH candidate pairs —
-    the 100 TB near-dup path: bucket equi-joins generate candidates,
-    exact cosine verifies.  Approximate (a pair in no shared bucket is
-    missed); recall tunable via tables × bits.  Plan contains no
-    nested-loop join and no all-pairs shuffle."""
+    the 100 TB near-dup path: bucket equi-joins over ``LSH_TABLES``
+    tables of ``LSH_BITS`` bits generate candidates, exact cosine
+    verifies.  Approximate: a pair in no shared bucket is missed.  Plan
+    contains no nested-loop join and no all-pairs shuffle."""
     cand = None
-    for t in range(tables):
-        b = materialize(lsh_buckets(emb, bits, t))
+    for t in range(LSH_TABLES):
+        b = materialize(lsh_buckets(emb, table=t))
         l = b.selectExpr("vec_id as a", "bucket")
         r = b.selectExpr("vec_id as b", "bucket")
         c = l.join(r, "bucket").filter(F.col("a") < F.col("b")).select("a", "b")
@@ -165,14 +169,8 @@ def cosine_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
     )
 
 
-#: default API: near-duplicate detection routes to the LSH plan — the
-#: 100 TB path.  The exact all-pairs form is ``cosine_near_dups_exact``
-#: (oracle gold standard only).
-cosine_near_dups = cosine_near_dups_lsh
-
-
 def ann_topk_lsh(emb: DataFrame, query_ids: list[int], k: int = 5,
-                 bits: int = 8, tables: int = 2) -> DataFrame:
+                 bits: int = LSH_BITS, tables: int = LSH_TABLES) -> DataFrame:
     """Approximate top-k: union candidates from ``tables`` LSH tables,
     exact cosine on candidates only (the IVF/LSH scale pattern).
     Bucketing is md5-derived and engine-reproducible, so the DuckDB

@@ -26,6 +26,12 @@ LANG_MARKERS: dict[str, list[str]] = {
     "zh": ["de5", "shi4", "le5", "zai4", "he2"],
 }
 
+#: Gopher upper bound on a kept document's word count
+GOPHER_MAX_WORDS = 100_000
+
+#: ``corpus_sample`` rate (permille) of a source absent from ``rates``
+SAMPLE_DEFAULT_PERMILLE = 1000
+
 
 def _marker_hits_expr(lang: str) -> str:
     toks = tokens_expr()
@@ -113,8 +119,7 @@ def quality_scores(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
-def gopher_quality(docs: DataFrame, min_words: int = 50,
-                   max_words: int = 100000) -> DataFrame:
+def gopher_quality(docs: DataFrame, min_words: int = 50) -> DataFrame:
     """Gopher/C4-style repetition + quality filter signals per document
     (the standard web-text curation rules: Rae et al. 2021 "Scaling
     Language Models" appendix A1.1, and the C4 cleaning heuristics),
@@ -157,7 +162,7 @@ def gopher_quality(docs: DataFrame, min_words: int = 50,
     )
     return sig.selectExpr(
         "*",
-        f"(n_words between {min_words} and {max_words}) "
+        f"(n_words between {min_words} and {GOPHER_MAX_WORDS}) "
         "and mean_word_len between 3 and 10 "
         "and symbol_word_ratio < 0.1 "
         "and bullet_frac < 0.9 and ellipsis_frac < 0.3 "
@@ -178,7 +183,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def normalize_text(docs: DataFrame) -> DataFrame:
     """(doc_id, text_norm): Unicode NFC normalization + whitespace
     collapse — the canonicalization pass before any hashing/dedup so
     byte-different but canonically-equal spellings (composed vs
@@ -196,7 +201,7 @@ def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     return docs.select(
         "doc_id",
-        F.regexp_replace(F.trim(_nfc(F.col(text_col))), r"\s+", " ")
+        F.regexp_replace(F.trim(_nfc(F.col("text"))), r"\s+", " ")
         .alias("text_norm"))
 
 
@@ -213,7 +218,7 @@ def fingerprints(docs: DataFrame) -> DataFrame:
 
 
 def corpus_split(docs: DataFrame, weights: dict[str, int] | None = None,
-                 key_col: str = "text", carry: tuple[str, ...] = ()) -> DataFrame:
+                 carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, bucket, split): deterministic content-keyed train/val/
     test assignment.  The bucket is H(md5('split:' || text)) % 100, so
     the assignment is (a) reproducible across runs and engines, (b)
@@ -224,32 +229,37 @@ def corpus_split(docs: DataFrame, weights: dict[str, int] | None = None,
 
     ``carry`` names extra input columns to pass through — filtering a
     corpus to one split then needs NO id-join back to the text (the
-    webtext_pipeline capstone saves a full-corpus shuffle this way)."""
+    webtext_pipeline capstone saves a full-corpus shuffle this way).
+
+    ``weights`` are percents per split, in order.  They must sum to 100
+    (ValueError otherwise): buckets past the last cut would get a null
+    split."""
     weights = weights or {"train": 98, "val": 1, "test": 1}
-    assert sum(weights.values()) == 100
+    if sum(weights.values()) != 100:
+        raise ValueError(
+            f"corpus_split weights must sum to 100, got {weights}")
     cum, case = 0, "case "
     for name, w in weights.items():
         cum += w
         case += f"when bucket < {cum} then '{name}' "
     case += "end"
-    keyed = "'split:' || " + key_col
+    keyed = "'split:' || text"
     return docs.selectExpr(
         "doc_id", *carry,
         f"cast({H(keyed)} % 100 as bigint) as bucket",
     ).selectExpr("doc_id", *carry, "bucket", f"{case} as split")
 
 
-def corpus_sample(docs: DataFrame, rates: dict[str, int],
-                  default: int = 1000) -> DataFrame:
+def corpus_sample(docs: DataFrame, rates: dict[str, int]) -> DataFrame:
     """(doc_id, source, bucket, keep): deterministic source-weighted
     corpus sampling — the mixture-construction step of a training run
     (per-source sampling rates in permille, e.g. wiki oversampled,
     crawl downsampled).  The bucket is H('sample:' || doc_id) % 1000,
     so the draw is reproducible across runs/engines and independent of
-    partitioning; sources absent from ``rates`` keep ``default``
-    permille.  Pure projection: zero shuffle, cost == the scan."""
+    partitioning; sources absent from ``rates`` keep
+    ``SAMPLE_DEFAULT_PERMILLE``.  Pure projection: zero shuffle, cost == the scan."""
     case = "case source " + " ".join(
-        f"when '{s}' then {r}" for s, r in rates.items()) + f" else {default} end"
+        f"when '{s}' then {r}" for s, r in rates.items()) + f" else {SAMPLE_DEFAULT_PERMILLE} end"
     keyed = "'sample:' || cast(doc_id as string)"
     return docs.selectExpr(
         "doc_id", "source",
@@ -257,8 +267,7 @@ def corpus_sample(docs: DataFrame, rates: dict[str, int],
     ).selectExpr("doc_id", "source", "bucket", f"bucket < {case} as keep")
 
 
-def distinctive_terms(docs: DataFrame, k: int = 3,
-                      min_len: int = 1) -> DataFrame:
+def distinctive_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, term, tf, df, rk): the k most distinctive terms per
     document — ranked by term frequency desc, document frequency asc
     (rarer-in-corpus wins ties), term asc.  The integer-only tf-idf
@@ -275,9 +284,9 @@ def distinctive_terms(docs: DataFrame, k: int = 3,
     from pyspark.sql import Window
 
     toks = tokens_expr()
+    # the empty tokens between repeated spaces are not terms
     terms = docs.selectExpr(
-        "doc_id", f"explode({toks}) as term").where(
-        f"length(term) >= {min_len}")
+        "doc_id", f"explode({toks}) as term").where("length(term) >= 1")
     tf = terms.groupBy("doc_id", "term").agg(
         F.count("*").cast("bigint").alias("tf"))
     df_rel = (terms.select("doc_id", "term").distinct()
@@ -336,7 +345,7 @@ def _rep_fold(n: int) -> str:
     )
 
 
-def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def ngram_repetition(docs: DataFrame) -> DataFrame:
     """The Gopher within-document n-gram repetition rules (Rae et al.
     2021 appendix A1.1) that ``gopher_quality`` (line-level rules)
     does not cover:
@@ -375,7 +384,7 @@ def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
         for pdf in batches:
             out: dict[str, list] = {c: [] for c in ["doc_id"] + int_cols}
-            for did, text in zip(pdf["doc_id"], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 # null text mirrors the SQL fold: concat_ws(' ', null)
                 # = '' -> tc 0; size(null) >= n is never true -> no
                 # grams -> all counts 0
@@ -415,18 +424,18 @@ def ngram_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
         + [f"dup{n}_frac < {v}" for n, v in sorted(GOPHER_DUP_NGRAM_MAX.items())]
     )
     return (
-        docs.select("doc_id", text_col).mapInPandas(run, schema=schema)
+        docs.select("doc_id", "text").mapInPandas(run, schema=schema)
         .selectExpr("doc_id", *top_cols, *dup_cols)
         .selectExpr("*", f"{keep} as keep_rep")
     )
 
 
-def token_logfreq(docs: DataFrame, permille: int = 1000) -> DataFrame:
+def token_logfreq(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tok, logfreq_permille): CCNet-style language-model
     quality proxy (Wenzek et al. 2020 score documents by LM perplexity;
     with no external LM the corpus itself is the model).  Per token,
     the integer rarity bucket floor(log2(corpus_count)); per document,
-    the mean bucket in permille: (permille * sum) div n_tok.  Gibberish
+    the mean bucket in permille: (1000 * sum) div n_tok.  Gibberish
     and rare-token soup score low, template/common prose scores high.
 
     Integer-only cross-engine arithmetic (same rationale as
@@ -457,6 +466,6 @@ def token_logfreq(docs: DataFrame, permille: int = 1000) -> DataFrame:
         .selectExpr(
             "doc_id",
             "cast(coalesce(n_tok, 0) as bigint) as n_tok",
-            f"cast(coalesce(({permille} * s) div n_tok, 0) as bigint) "
+            "cast(coalesce((1000 * s) div n_tok, 0) as bigint) "
             "as logfreq_permille")
     )

@@ -54,10 +54,10 @@ _STEPS: list[tuple[str, str, str]] = [
 _HOST_RE = r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)"
 
 
-def normalize_url_expr(dialect: str, col: str = "url") -> str:
-    """SQL expression canonicalizing ``col`` (identical semantics in
+def normalize_url_expr(dialect: str) -> str:
+    """SQL expression canonicalizing ``url`` (identical semantics in
     Spark SQL and DuckDB)."""
-    e = col
+    e = "url"
     # steps that precede host-lowercasing: fragment strip only (the
     # port strip pattern is case-sensitive on the scheme, so lowercase
     # the prefix first, then strip ports/params)
@@ -80,25 +80,26 @@ def normalize_url_expr(dialect: str, col: str = "url") -> str:
     return e
 
 
-def normalize_urls(df: DataFrame, url_col: str = "url",
-                   out_col: str = "canonical_url") -> DataFrame:
-    """Adds ``canonical_url`` (pure JVM column expressions)."""
-    return df.withColumn(out_col, F.expr(normalize_url_expr(SPARK, url_col)))
+def normalize_urls(df: DataFrame) -> DataFrame:
+    """Adds ``canonical_url``, the canonical form of ``url`` (pure JVM
+    column expressions)."""
+    return df.withColumn("canonical_url",
+                         F.expr(normalize_url_expr(SPARK)))
 
 
-def dedup_by_url(df: DataFrame, url_col: str = "url") -> DataFrame:
+def dedup_by_url(df: DataFrame) -> DataFrame:
     """(canonical_url, n_variants, first_url): url-duplicate groups —
     one shuffle on the canonical key; at 100 TB this is the url-hash
     partitioning key for everything downstream."""
     return (
-        normalize_urls(df, url_col)
+        normalize_urls(df)
         .groupBy("canonical_url")
         .agg(F.count("*").cast("bigint").alias("n_variants"),
-             F.min(url_col).alias("first_url"))
+             F.min("url").alias("first_url"))
     )
 
 
-def host_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
+def host_stats(df: DataFrame) -> DataFrame:
     """(host, n_urls, n_unique_paths): per-domain crawl statistics —
     the grouping every politeness/curation policy keys on (per-domain
     caps, domain-level quality priors).  ``parse_url`` host extraction
@@ -107,16 +108,15 @@ def host_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
     existing salted repartition for megadomains)."""
     return (
         df.select(
-            F.expr(f"parse_url({url_col}, 'HOST')").alias("host"),
-            F.expr(f"parse_url({url_col}, 'PATH')").alias("path"))
+            F.expr("parse_url(url, 'HOST')").alias("host"),
+            F.expr("parse_url(url, 'PATH')").alias("path"))
         .groupBy("host")
         .agg(F.count("*").cast("bigint").alias("n_urls"),
              F.countDistinct("path").cast("bigint").alias("n_unique_paths"))
     )
 
 
-def url_pattern_traps(df: DataFrame, min_urls: int = 100,
-                      url_col: str = "url") -> DataFrame:
+def url_pattern_traps(df: DataFrame, min_urls: int = 100) -> DataFrame:
     """Crawl-trap pattern mining: generalize every URL by collapsing
     digit runs in its path+query to ``N`` (``/2024/01/31?page=7`` →
     ``/N/N/N?page=N``) and surface the (host, pattern) groups with at
@@ -136,14 +136,14 @@ def url_pattern_traps(df: DataFrame, min_urls: int = 100,
     """
     return (
         df.select(
-            F.expr(f"parse_url({url_col}, 'HOST')").alias("host"),
+            F.expr("parse_url(url, 'HOST')").alias("host"),
             F.expr(
                 "regexp_replace(concat("
-                f"coalesce(parse_url({url_col}, 'PATH'), ''), "
-                f"case when parse_url({url_col}, 'QUERY') is not null "
-                f"then '?' || parse_url({url_col}, 'QUERY') else '' end"
+                "coalesce(parse_url(url, 'PATH'), ''), "
+                "case when parse_url(url, 'QUERY') is not null "
+                "then '?' || parse_url(url, 'QUERY') else '' end"
                 "), '[0-9]+', 'N')").alias("pattern"),
-            F.col(url_col).alias("u"))
+            F.col("url").alias("u"))
         .groupBy("host", "pattern")
         .agg(F.count("*").cast("bigint").alias("n_urls"),
              F.min("u").alias("example_url"))
@@ -186,9 +186,9 @@ def expected_canonical_expr(dialect: str) -> str:
     )
 
 
-def latest_snapshot(df: DataFrame, key_cols: tuple = ("url",),
-                    ts_col: str = "warc_ts") -> DataFrame:
-    """Incremental crawl merge: keep the newest capture per key.
+def latest_snapshot(df: DataFrame) -> DataFrame:
+    """Incremental crawl merge: keep the newest capture (``warc_ts``)
+    per ``url``.
 
     A recrawl sees every URL many times; the corpus a pipeline trains
     on is "latest capture wins".  Formulated as ONE partial-aggregable
@@ -198,17 +198,12 @@ def latest_snapshot(df: DataFrame, key_cols: tuple = ("url",),
     dedup.line_dedup; the oracle uses the window form independently).
     Ties on ts break by the remaining columns in order — deterministic.
     """
-    from pyspark.sql import functions as F
-
-    key_cols = list(key_cols)
-    rest = [c for c in df.columns if c not in key_cols and c != ts_col]
-    agg = F.max(F.struct(ts_col, *rest)).alias("_w")
-    return (df.groupBy(*key_cols).agg(agg)
-            .select(*key_cols, "_w.*"))
+    rest = [c for c in df.columns if c not in ("url", "warc_ts")]
+    agg = F.max(F.struct("warc_ts", *rest)).alias("_w")
+    return df.groupBy("url").agg(agg).select("url", "_w.*")
 
 
-def crawl_delta(old: DataFrame, new: DataFrame, key: str = "url",
-                text_col: str = "text") -> DataFrame:
+def crawl_delta(old: DataFrame, new: DataFrame) -> DataFrame:
     """Snapshot diff between two crawls of the same url space:
     (url, status added|removed|changed|unchanged, old_md5, new_md5).
 
@@ -218,14 +213,12 @@ def crawl_delta(old: DataFrame, new: DataFrame, key: str = "url",
     the join rows carry 32-byte digests, never document text.  The
     incremental-crawl planner consumes this to fetch only
     added|changed urls."""
-    from pyspark.sql import functions as F
-
-    o = old.select(F.col(key), F.md5(F.col(text_col)).alias("old_md5"))
-    n = new.select(F.col(key), F.md5(F.col(text_col)).alias("new_md5"))
+    o = old.select("url", F.md5(F.col("text")).alias("old_md5"))
+    n = new.select("url", F.md5(F.col("text")).alias("new_md5"))
     return (
-        o.join(n, key, "full_outer")
+        o.join(n, "url", "full_outer")
         .selectExpr(
-            key,
+            "url",
             "case when old_md5 is null then 'added' "
             "when new_md5 is null then 'removed' "
             "when old_md5 = new_md5 then 'unchanged' "

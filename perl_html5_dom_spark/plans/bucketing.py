@@ -16,29 +16,24 @@ table names; set ``spark.sql.warehouse.dir`` to place the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
-def write_bucketed(df: DataFrame, table: str, bucket_cols=("url",),
-                   buckets: int = 64, mode: str = "overwrite") -> None:
+def write_bucketed(df: DataFrame, table: str, buckets: int = 64) -> None:
     """Persist ``df`` as a parquet table bucketed (and sort-ordered)
-    by ``bucket_cols`` — sorted buckets also skip the SMJ sort."""
-    cols = list(bucket_cols)
-    (df.write.mode(mode)
-     .bucketBy(buckets, *cols)
-     .sortBy(*cols)
+    by ``url``, replacing any previous table — sorted buckets also skip
+    the SMJ sort."""
+    (df.write.mode("overwrite")
+     .bucketBy(buckets, "url")
+     .sortBy("url")
      .format("parquet")
      .saveAsTable(table))
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
-def bucketed_join_is_shuffle_free(a: DataFrame, b: DataFrame,
-                                  on=("url",)) -> bool:
-    """True when the equi-join of two (bucketed) frames plans with no
-    Exchange — the verification hook used by tests and plan audits."""
-    plan = (a.join(b, list(on))._jdf.queryExecution()
+def bucketed_join_is_shuffle_free(a: DataFrame, b: DataFrame) -> bool:
+    """True when the equi-join of two (bucketed) frames on ``url``
+    plans with no Exchange — the verification hook used by tests and
+    plan audits."""
+    plan = (a.join(b, ["url"])._jdf.queryExecution()
             .executedPlan().toString())
     return "Exchange" not in plan

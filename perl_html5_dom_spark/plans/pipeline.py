@@ -30,28 +30,30 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 #: salt stripe so a handful of huge pages can't straggle one task
 GIANT_HTML_BYTES = 4 << 20
 
+#: salt stripes per url hash in :func:`salted_repartition`
+SALT_BUCKETS = 16
 
-def salted_repartition(df: DataFrame, num_partitions: int,
-                       salt_buckets: int = 16,
-                       url_col: str = "url", html_col: str = "html") -> DataFrame:
-    """Repartition pages by salted url-hash.
 
-    partition key = xxhash64(url) spread over ``salt_buckets`` stripes,
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Repartition pages (url, html) by salted url-hash.
+
+    partition key = xxhash64(url) spread over ``SALT_BUCKETS`` stripes,
     with giant documents additionally striped by their size bucket so
     co-located heavy rows split apart.  Deterministic (no rand()) —
     replays produce identical placement, which resume relies on."""
     salt = (
-        F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
-        + F.when(F.length(F.col(html_col)) > GIANT_HTML_BYTES,
-                 F.pmod(F.length(F.col(html_col)), F.lit(salt_buckets)))
+        F.pmod(F.xxhash64(F.col("url")), F.lit(SALT_BUCKETS))
+        + F.when(F.length(F.col("html")) > GIANT_HTML_BYTES,
+                 F.pmod(F.length(F.col("html")), F.lit(SALT_BUCKETS)))
         .otherwise(F.lit(0))
     )
-    return df.repartition(num_partitions, F.xxhash64(F.col(url_col)), salt)
+    return df.repartition(num_partitions, F.xxhash64(F.col("url")), salt)
 
 
-def bucket_of(url_col="url", buckets: int = 1024):
-    """Stable work-bucket id for lineage/resume (url-range analog)."""
-    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(buckets)).cast("int")
+def bucket_of(buckets: int = 1024):
+    """Stable work-bucket id of ``url`` for lineage/resume (url-range
+    analog)."""
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(buckets)).cast("int")
 
 
 def extract_with_lineage(

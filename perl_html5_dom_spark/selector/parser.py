@@ -26,15 +26,6 @@ from __future__ import annotations
 
 import re
 
-_COMBINATOR_NAMES = {
-    ">>": "descendant",
-    ">": "child",
-    "+": "sibling",
-    "~": "adjacent",
-    "||": "column",
-    "^": "begin",
-}
-
 _ATTR_MATCH = {
     "=": "equal",
     "~=": "include",
@@ -61,7 +52,6 @@ _NTH_FUNCS = frozenset(
 )
 
 _IDENT_RE = re.compile(r"(?:[-]?(?:[a-zA-Z_\u0080-\U0010ffff]|\\.)(?:[a-zA-Z0-9_\-\u0080-\U0010ffff]|\\.)*)")
-_NUM_RE = re.compile(r"[-+]?\d+")
 _WS_RE = re.compile(r"[ \t\n\x0c\r]+")
 
 _NTH_RE = re.compile(

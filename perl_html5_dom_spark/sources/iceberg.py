@@ -6,9 +6,9 @@ lang string).  This module is the one seam where that table enters the
 pipeline:
 
 * with the Iceberg runtime on the classpath (a real cluster),
-  ``pages_table`` reads the catalog table — snapshot/time travel via
-  the standard read options, partition pruning and column projection
-  from the table's own spec;
+  ``pages_table`` reads the catalog table — snapshot pinning via the
+  standard ``snapshot-id`` read option, partition pruning and column
+  projection from the table's own spec;
 * in environments without the runtime (this sandbox), the same call
   falls back to a parquet directory of identical schema, so every
   downstream operator and test exercises the identical contract.
@@ -71,15 +71,14 @@ def _not_iceberg(exc: Exception) -> bool:
 
 def pages_table(spark: SparkSession, table: str,
                 snapshot_id: int | None = None,
-                as_of_timestamp: str | None = None,
                 columns: list[str] | None = None) -> DataFrame:
     """Read the pages table by catalog name (Iceberg) or path (parquet).
 
-    ``snapshot_id`` / ``as_of_timestamp`` select an Iceberg snapshot
-    (time travel — reproducing the exact corpus a training run saw);
-    they are rejected on the parquet fallback rather than silently
-    ignored.  ``columns`` prunes the projection AT THE SOURCE so the
-    scan never deserializes page bytes a query does not use.
+    ``snapshot_id`` selects an Iceberg snapshot (time travel —
+    reproducing the exact corpus a training run saw); it is rejected on
+    the parquet fallback rather than silently ignored.  ``columns``
+    prunes the projection AT THE SOURCE so the scan never deserializes
+    page bytes a query does not use.
 
     Only the no-runtime / not-a-table case falls back to parquet; real
     Iceberg errors (snapshot not found, corrupt metadata) propagate.
@@ -88,13 +87,11 @@ def pages_table(spark: SparkSession, table: str,
     try:
         if snapshot_id is not None:
             reader = reader.option("snapshot-id", str(snapshot_id))
-        if as_of_timestamp is not None:
-            reader = reader.option("as-of-timestamp", as_of_timestamp)
         df = reader.format("iceberg").load(table)
     except Exception as exc:
         if not _not_iceberg(exc):
             raise
-        if snapshot_id is not None or as_of_timestamp is not None:
+        if snapshot_id is not None:
             raise ValueError(
                 "time travel requires the Iceberg runtime; the parquet "
                 "fallback has no snapshot lineage") from exc
@@ -103,15 +100,14 @@ def pages_table(spark: SparkSession, table: str,
     return df.select(*columns) if columns else df
 
 
-def write_pages(df: DataFrame, table: str, mode: str = "append",
-                partition_by: str | None = "warc_ts") -> None:
+def write_pages(df: DataFrame, table: str, mode: str = "append") -> None:
     """Write a pages DataFrame to the Iceberg table (or parquet path).
 
-    Appends by default — crawl drops are incremental; ``partition_by``
-    matches the crawl-date partitioning a 10^12-row table needs for
-    time-range pruning.  On the parquet fallback, partitioning uses a
-    derived date column (parquet cannot partition on a raw timestamp
-    with useful pruning granularity).
+    Appends by default — crawl drops are incremental.  On the parquet
+    fallback the rows are partitioned by crawl date (``warc_date``,
+    derived from ``warc_ts``) for the time-range pruning a 10^12-row
+    table needs; parquet cannot partition on a raw timestamp with
+    useful pruning granularity.
     """
     _validate(df)
     try:
@@ -126,13 +122,6 @@ def write_pages(df: DataFrame, table: str, mode: str = "append",
             raise
         from pyspark.sql import functions as F
 
-        out = df
-        part = []
-        if partition_by == "warc_ts":
-            out = df.withColumn("warc_date",
-                                F.to_date("warc_ts").cast("string"))
-            part = ["warc_date"]
-        w = out.write.mode("append" if mode == "append" else "overwrite")
-        if part:
-            w = w.partitionBy(*part)
-        w.parquet(table)
+        out = df.withColumn("warc_date", F.to_date("warc_ts").cast("string"))
+        (out.write.mode("append" if mode == "append" else "overwrite")
+         .partitionBy("warc_date").parquet(table))

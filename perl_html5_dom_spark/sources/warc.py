@@ -44,9 +44,9 @@ class WarcError(ValueError):
 # ---------------------------------------------------------------------------
 
 
-def _split_gzip_members(data: bytes) -> Iterator[bytes]:
-    """Inflate a multi-member gzip stream, yielding one decompressed
-    blob per member (the CC per-record layout)."""
+def _split_gzip_members(data: bytes) -> Iterator[tuple[int, int, bytes]]:
+    """Inflate a multi-member gzip stream, yielding (offset, compressed
+    length, decompressed blob) per member (the CC per-record layout)."""
     pos = 0
     n = len(data)
     while pos < n:
@@ -57,10 +57,10 @@ def _split_gzip_members(data: bytes) -> Iterator[bytes]:
             out = d.decompress(data[pos:])
         except zlib.error as exc:
             raise WarcError(f"corrupt gzip member at {pos}: {exc}") from exc
-        yield out
         consumed = len(data) - pos - len(d.unused_data)
         if consumed <= 0:
             break
+        yield pos, consumed, out
         pos += consumed
 
 
@@ -80,6 +80,10 @@ def _parse_headers(block: bytes) -> dict[str, str]:
 
 
 def _records_from_plain(data: bytes) -> Iterator[dict]:
+    """Frame the records of uncompressed WARC bytes.  Besides the
+    fields :func:`iter_warc_records` documents, each record carries
+    ``offset`` and ``length``: its byte span in ``data``, trailing
+    CRLFs excluded."""
     pos = 0
     n = len(data)
     while pos < n:
@@ -95,13 +99,13 @@ def _records_from_plain(data: bytes) -> Iterator[dict]:
             raise WarcError("unterminated WARC header block")
         version_end = data.find(_CRLF, pos)
         headers = _parse_headers(data[version_end + 2:hdr_end])
-        length = int(headers.get("content-length", "0"))
-        body = data[hdr_end + 4:hdr_end + 4 + length]
-        pos = hdr_end + 4 + length
-        yield {"headers": headers, "body": body,
+        end = hdr_end + 4 + int(headers.get("content-length", "0"))
+        yield {"headers": headers, "body": data[hdr_end + 4:end],
                "warc_type": headers.get("warc-type", ""),
                "target_uri": headers.get("warc-target-uri", ""),
-               "date": headers.get("warc-date", "")}
+               "date": headers.get("warc-date", ""),
+               "offset": pos, "length": end - pos}
+        pos = end
 
 
 def split_http_response(body: bytes) -> tuple[dict[str, str], bytes]:
@@ -120,10 +124,12 @@ def split_http_response(body: bytes) -> tuple[dict[str, str], bytes]:
 
 def iter_warc_records(data: bytes) -> Iterator[dict]:
     """Yield dicts for every record: ``warc_type``, ``target_uri``,
-    ``date``, ``headers`` (WARC named fields, lower-cased), ``body``;
+    ``date``, ``headers`` (WARC named fields, lower-cased), ``body``,
+    and the record's ``offset`` + ``length`` in its inflated member;
     response records additionally carry ``http_headers`` + ``payload``."""
     if data[:2] == b"\x1f\x8b":
-        blobs: Iterable[bytes] = _split_gzip_members(data)
+        blobs: Iterable[bytes] = (
+            blob for _, _, blob in _split_gzip_members(data))
     else:
         blobs = (data,)
     for blob in blobs:
@@ -149,62 +155,34 @@ def iter_cdx_entries(data: bytes) -> Iterator[dict]:
     publishes exactly this index next to every crawl)."""
     import hashlib
 
-    def entries(blob: bytes, offset: int, length: int) -> Iterator[dict]:
-        for rec in _records_from_plain(blob):
-            if rec["warc_type"] != "response":
-                continue
-            http, payload = split_http_response(rec["body"])
-            try:
-                status = int(http.get(":status", ""))
-            except ValueError:
-                status = 0
-            yield {
-                "url": rec["target_uri"],
-                "warc_ts": rec["date"],
-                "offset": offset,
-                "length": length,
-                "status": status,
-                "mime": http.get("content-type", "").split(";")[0].strip(),
-                "payload_len": len(payload),
-                "payload_md5": hashlib.md5(payload).hexdigest(),
-            }
-
     if data[:2] == b"\x1f\x8b":
-        pos = 0
-        n = len(data)
-        while pos < n:
-            if data[pos:pos + 2] != b"\x1f\x8b":
-                raise WarcError(f"not a gzip member at offset {pos}")
-            d = zlib.decompressobj(wbits=31)
-            try:
-                blob = d.decompress(data[pos:])
-            except zlib.error as exc:
-                raise WarcError(
-                    f"corrupt gzip member at {pos}: {exc}") from exc
-            consumed = len(data) - pos - len(d.unused_data)
-            if consumed <= 0:
-                break
-            yield from entries(blob, pos, consumed)
-            pos += consumed
+        # per-record gzip: a record's span is its member's compressed span
+        framed = ((offset, length, rec)
+                  for offset, length, blob in _split_gzip_members(data)
+                  for rec in _records_from_plain(blob))
     else:
         # plain .warc (or whole-file gzip already inflated by a caller):
         # spans are the record's own byte range in the file
-        pos = 0
-        n = len(data)
-        while pos < n:
-            while data[pos:pos + 2] == _CRLF:
-                pos += 2
-            if pos >= n:
-                return
-            hdr_end = data.find(_CRLF + _CRLF, pos)
-            if hdr_end < 0:
-                raise WarcError("unterminated WARC header block")
-            version_end = data.find(_CRLF, pos)
-            headers = _parse_headers(data[version_end + 2:hdr_end])
-            length = int(headers.get("content-length", "0"))
-            end = hdr_end + 4 + length
-            yield from entries(data[pos:end], pos, end - pos)
-            pos = end
+        framed = ((rec["offset"], rec["length"], rec)
+                  for rec in _records_from_plain(data))
+    for offset, length, rec in framed:
+        if rec["warc_type"] != "response":
+            continue
+        http, payload = split_http_response(rec["body"])
+        try:
+            status = int(http.get(":status", ""))
+        except ValueError:
+            status = 0
+        yield {
+            "url": rec["target_uri"],
+            "warc_ts": rec["date"],
+            "offset": offset,
+            "length": length,
+            "status": status,
+            "mime": http.get("content-type", "").split(";")[0].strip(),
+            "payload_len": len(payload),
+            "payload_md5": hashlib.md5(payload).hexdigest(),
+        }
 
 
 # ---------------------------------------------------------------------------
@@ -214,14 +192,13 @@ def iter_cdx_entries(data: bytes) -> Iterator[dict]:
 
 def build_record(warc_type: str, body: bytes,
                  uri: str | None = None, date: str | None = None,
-                 record_id: str | None = None,
                  content_type: str | None = None) -> bytes:
     fields = [("WARC-Type", warc_type)]
     if uri:
         fields.append(("WARC-Target-URI", uri))
     fields.append(("WARC-Date", date or "2025-01-01T00:00:00Z"))
     fields.append(("WARC-Record-ID",
-                   record_id or f"<urn:uuid:{abs(hash((warc_type, uri))):032x}>"))
+                   f"<urn:uuid:{abs(hash((warc_type, uri))):032x}>"))
     if content_type:
         fields.append(("Content-Type", content_type))
     fields.append(("Content-Length", str(len(body))))
@@ -240,15 +217,14 @@ def build_response_record(uri: str, html: bytes, date: str | None = None,
         content_type="application/http; msgtype=response")
 
 
-def build_warc(records: Iterable[bytes], per_record_gzip: bool = True,
-               warcinfo: bool = True) -> bytes:
+def build_warc(records: Iterable[bytes], per_record_gzip: bool = True) -> bytes:
     """Assemble a .warc.gz (per-record gzip members, the CC layout) or a
-    plain .warc when ``per_record_gzip`` is False."""
-    recs = list(records)
-    if warcinfo:
-        info = b"software: perl-html5-dom-spark warc writer\r\n"
-        recs.insert(0, build_record("warcinfo", info,
-                                    content_type="application/warc-fields"))
+    plain .warc when ``per_record_gzip`` is False; a ``warcinfo``
+    record leads."""
+    info = b"software: perl-html5-dom-spark warc writer\r\n"
+    recs = [build_record("warcinfo", info,
+                         content_type="application/warc-fields"),
+            *records]
     if not per_record_gzip:
         return b"".join(recs)
     out = io.BytesIO()
@@ -259,13 +235,12 @@ def build_warc(records: Iterable[bytes], per_record_gzip: bool = True,
     return out.getvalue()
 
 
-def build_conversion_record(uri: str, text: str,
-                            date: str | None = None) -> bytes:
+def build_conversion_record(uri: str, text: str) -> bytes:
     """WET-style ``conversion`` record: the extracted plain text of a
     page (the Common Crawl WET sidecar format — same ISO 28500 framing
     as WARC, payload is UTF-8 text with no HTTP envelope)."""
     return build_record("conversion", text.encode("utf-8"), uri=uri,
-                        date=date, content_type="text/plain")
+                        content_type="text/plain")
 
 
 def build_wet(records: Iterable[bytes], per_record_gzip: bool = True) -> bytes:

@@ -4,8 +4,11 @@ The reference's streaming surface is chunked parse of one document
 (/root/reference/DOM.xs:814-931) — per SURVEY.md §2.9 the Spark analog
 is WARC-batch ingestion: ``readStream`` over arriving page files →
 the same extraction kernel → ``writeStream`` with checkpointing.  The
-kernel is identical to the batch path (mapInPandas works unchanged on
-streaming DataFrames); exactly-once lands on the sink's commit log.
+streaming pipelines call the batch operators themselves
+(``extract_pages``, ``dedup.minhash_band_keys``: mapInPandas works
+unchanged on streaming DataFrames); exactly-once lands on the sink's
+commit log.  Dedup state is keyed on the page ``text`` digest, and
+event time is the page's ``warc_ts``.
 """
 
 from __future__ import annotations
@@ -20,6 +23,10 @@ PAGES_SCHEMA = (
     "text string, lang string"
 )
 
+#: crawl-rate monitor: tumbling window width and event-time lateness
+CRAWL_RATE_WINDOW = "1 minute"
+CRAWL_RATE_WATERMARK = "5 minutes"
+
 
 def read_page_stream(spark: SparkSession, input_dir: str,
                      max_files_per_trigger: int = 4) -> DataFrame:
@@ -31,16 +38,12 @@ def read_page_stream(spark: SparkSession, input_dir: str,
     )
 
 
-def extract_stream(pages: DataFrame, span_selector: str | None = "a[href]") -> DataFrame:
-    """Streaming extraction — same kernel as batch."""
-    return extract_pages(pages, span_selector=span_selector)
-
-
 def start_extraction(spark: SparkSession, input_dir: str, output_dir: str,
                      checkpoint_dir: str, trigger_once: bool = True):
-    """File-sink pipeline with checkpoint-based exactly-once."""
+    """File-sink pipeline with checkpoint-based exactly-once: the batch
+    ``extract_pages`` kernel over the page stream."""
     q = (
-        extract_stream(read_page_stream(spark, input_dir))
+        extract_pages(read_page_stream(spark, input_dir))
         .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
@@ -50,10 +53,8 @@ def start_extraction(spark: SparkSession, input_dir: str, output_dir: str,
     return q.start()
 
 
-def dedup_stream(stream: DataFrame, key_col: str = "text",
-                 within: str | None = None,
-                 ts_col: str = "warc_ts") -> DataFrame:
-    """Exact dedup-on-ingest: drop rows whose ``key_col`` digest was
+def dedup_stream(stream: DataFrame, within: str | None = None) -> DataFrame:
+    """Exact dedup-on-ingest: drop rows whose ``text`` digest was
     already seen in ANY earlier micro-batch (state survives restarts
     via the checkpoint).  The standard first dedup stage of a streaming
     crawl pipeline — dedup at ingest is far cheaper than dedup of the
@@ -62,12 +63,12 @@ def dedup_stream(stream: DataFrame, key_col: str = "text",
     State growth: unbounded by default (one digest per distinct
     document, exactly like the batch operator's shuffle).  Pass
     ``within`` (e.g. ``"7 days"``) to bound state with a watermark on
-    ``ts_col`` — then only duplicates arriving within the window are
+    ``warc_ts`` — then only duplicates arriving within the window are
     dropped (dropDuplicatesWithinWatermark), which is the 100 TB
     deployment shape: bounded state + a periodic batch sweep."""
-    df = stream.withColumn("_digest", F.md5(F.col(key_col).cast("string")))
+    df = stream.withColumn("_digest", F.md5(F.col("text").cast("string")))
     if within is not None:
-        df = (df.withWatermark(ts_col, within)
+        df = (df.withWatermark("warc_ts", within)
               .dropDuplicatesWithinWatermark(["_digest"]))
     else:
         df = df.dropDuplicates(["_digest"])
@@ -135,20 +136,19 @@ def near_dup_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-def crawl_rate_stream(pages: DataFrame, window: str = "1 minute",
-                      watermark: str = "5 minutes",
-                      ts_col: str = "warc_ts") -> DataFrame:
+def crawl_rate_stream(pages: DataFrame) -> DataFrame:
     """Streaming politeness monitor: fetches per host per tumbling
-    window — (window_start, window_end, host, n_fetches).  The crawl
-    scheduler watches this to throttle hosts that exceed their budget.
+    ``CRAWL_RATE_WINDOW`` of ``warc_ts`` — (window_start, window_end,
+    host, n_fetches).  The crawl scheduler watches this to throttle
+    hosts that exceed their budget.
 
-    Watermarked windowed count: state is bounded to the watermark
-    horizon and windows finalize (append mode works) once the event
-    time passes; the aggregation is the same partial-agg shape as the
-    batch host_stats, keyed (window, host)."""
+    Watermarked windowed count: state is bounded to the
+    ``CRAWL_RATE_WATERMARK`` horizon and windows finalize (append mode
+    works) once the event time passes; the aggregation is the same
+    partial-agg shape as the batch host_stats, keyed (window, host)."""
     return (
-        pages.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"),
+        pages.withWatermark("warc_ts", CRAWL_RATE_WATERMARK)
+        .groupBy(F.window(F.col("warc_ts"), CRAWL_RATE_WINDOW).alias("w"),
                  F.expr("parse_url(url, 'HOST')").alias("host"))
         .count()
         .selectExpr("w.start as window_start", "w.end as window_end",
@@ -169,7 +169,7 @@ def start_warc_extraction(spark: SparkSession, warc_dir: str, output_dir: str,
     pages = read_warc_stream(spark, warc_dir,
                              max_files_per_trigger=max_files_per_trigger)
     q = (
-        extract_stream(pages)
+        extract_pages(pages)
         .writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)

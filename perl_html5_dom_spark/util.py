@@ -86,7 +86,7 @@ def map_docs(df: DataFrame, keys, body: str, fn: Callable, schema: str,
 
 
 @contextlib.contextmanager
-def temp_view(df: DataFrame, prefix: str = "__v") -> Iterator[str]:
+def temp_view(df: DataFrame) -> Iterator[str]:
     """Register ``df`` under a collision-free unique temp-view name for
     the duration of the block; yields the name.
 
@@ -95,7 +95,7 @@ def temp_view(df: DataFrame, prefix: str = "__v") -> Iterator[str]:
     (e.g. robots rules + url list).  The view is dropped on exit;
     ``spark.sql`` analyzes eagerly, so DataFrames built inside the
     block stay valid after it."""
-    name = f"{prefix}_{next(_counter)}"
+    name = f"__v_{next(_counter)}"
     df.createOrReplaceTempView(name)
     try:
         yield name
@@ -103,8 +103,7 @@ def temp_view(df: DataFrame, prefix: str = "__v") -> Iterator[str]:
         df.sparkSession.catalog.dropTempView(name)
 
 
-def sql_over(builder: Callable[..., str], *dfs: DataFrame,
-             prefix: str = "__v") -> DataFrame:
+def sql_over(builder: Callable[..., str], *dfs: DataFrame) -> DataFrame:
     """Run ``builder(name1, name2, ...)`` SQL over the given DataFrames.
 
     Each DataFrame is registered under a collision-free unique temp-view
@@ -115,7 +114,7 @@ def sql_over(builder: Callable[..., str], *dfs: DataFrame,
     spark = dfs[0].sparkSession
     names = []
     for df in dfs:
-        name = f"{prefix}_{next(_counter)}"
+        name = f"__v_{next(_counter)}"
         df.createOrReplaceTempView(name)
         names.append(name)
     try:

@@ -319,6 +319,17 @@ def test_corpus_split_deterministic_and_leak_safe(spark):
     assert set(half.values()) <= {"a", "b"}
 
 
+def test_corpus_split_rejects_weights_not_summing_to_100(spark):
+    """Weights off 100 would leave buckets past the last cut with a null
+    split; the check is a ValueError, so ``python -O`` keeps it."""
+    from perl_html5_dom_spark.operators.textstats import corpus_split
+
+    docs = spark.createDataFrame([(1, "text")], "doc_id bigint, text string")
+    for weights in ({"train": 90, "test": 5}, {"train": 99, "test": 2}):
+        with pytest.raises(ValueError, match="sum to 100"):
+            corpus_split(docs, weights)
+
+
 def test_distinctive_terms_ranking(spark):
     from perl_html5_dom_spark.operators.textstats import distinctive_terms
 
